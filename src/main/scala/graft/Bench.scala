@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
@@ -35,14 +34,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val harness = Harness()
+    val spark = harness.spark
 
     // Warm the JVM/codegen once on the smallest table so the first timed
     // query doesn't pay one-time session costs.
@@ -79,21 +72,6 @@ object Bench {
       Seq.fill(3)(calibOnce()).min
     }
 
-    // Session-conf snapshot: restored after every query so no query can
-    // perturb another's environment (e.g. the streaming reader's
-    // nanosAsLong flag) — per-query numbers must not depend on bench order.
-    val confSnapshot = spark.conf.getAll
-    def restoreConf(): Unit = {
-      val now = spark.conf.getAll
-      for (k <- now.keySet ++ confSnapshot.keySet) {
-        (confSnapshot.get(k), now.get(k)) match {
-          case (Some(v0), Some(v1)) if v0 != v1 => spark.conf.set(k, v0)
-          case (Some(v0), None) => spark.conf.set(k, v0)
-          case (None, Some(_)) => try spark.conf.unset(k) catch { case _: Throwable => () }
-          case _ => ()
-        }
-      }
-    }
     var failed = List.empty[String]
     // Interleaved calibration (round 15): the session-start scalar above is
     // blind to MID-RUN load spikes — four rounds running (r08 skipgram, r12
@@ -114,51 +92,13 @@ object Bench {
       // 0.8s queries spiking to 9s once), re-time once and keep the min;
       // quiet queries pay for a single timed run, so total bench wall time
       // stays near the single-run cost.
-      def runOnce(): Double = {
+      // Harness.run sweeps outside the timed window, on the failure path
+      // too: caches and memos (releaseAll, so no run free-rides on the
+      // previous run's shared builds), session conf, streaming state
+      def runOnce(): Double = harness.run { s =>
         val t0 = System.nanoTime()
-        // The cleanup runs in a finally: a query that THROWS after loading
-        // state-store providers or mutating session conf must not bleed that
-        // state into every subsequent timed query — the failure path is
-        // exactly where contamination would otherwise go unswept.
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        } finally {
-          // outside the timed window: sweep this run's operator-internal
-          // transient caches INCLUDING the memoized shared artifacts (so no
-          // run free-rides on the previous run's blocks and storage can't
-          // accumulate across the 60+ query session) and restore any session
-          // conf the query mutated. releaseAll rather than release (round
-          // 17, the r16 verdict's top item): memo-backed shared builds
-          // (jaccard3 edges, recall-harness truth, IVFPQ codebooks) used to
-          // survive warm-up→timed AND query→query, so the reported seconds
-          // for their consumers excluded the shared build entirely; sweeping
-          // memos per run makes every timed run compute its artifacts from
-          // the parquet inputs — the honest accounting the brief requires.
-          TransientCache.releaseAll(spark)
-          restoreConf()
-          // If this run was a stateful streaming query, its stopped stream
-          // leaves every loaded state-store provider pinned until background
-          // maintenance unloads it — heap that the NEXT timed query pays for
-          // in full GCs (BENCH_r10: q3_join_broadcast 4.6×, alphabetically
-          // first after the q33–q39 streaming block). Tear the providers
-          // down deterministically and compact now, outside any timed window.
-          //
-          // Independently (round 13): long heavy-query sessions accumulate
-          // heap that per-query release CANNOT reach — every broadcast join
-          // pins driver + MemoryStore copies until the ContextCleaner reaps
-          // the weakly-referenced Broadcast object AFTER a GC, and the
-          // cleaner itself only runs post-GC. Invisible at fixture scale; a
-          // 54-query sf10 wave OOM'd the 24g heap with EVERY query passing
-          // in isolation (big-vocab dictionary broadcasts from the dedup/
-          // text family dominating). When the heap is past 60% after the
-          // sweep, nudge the collector so dead broadcasts become reapable —
-          // outside the timed window, so per-query numbers are unaffected.
-          val rt = Runtime.getRuntime
-          if (org.apache.spark.sql.graftshim.SessionSweep.sweepStreamingState()
-              || rt.totalMemory() - rt.freeMemory() > rt.maxMemory() / 10L * 6L)
-            System.gc()
-        }
+        fn(s, sfDir).write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t0) / 1e9
       }
       val warmSec =
         try Some(runOnce())

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe fixture generator — the committed, reproducible recipe
@@ -90,14 +90,7 @@ object ProbeData {
     val tablesWanted: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).toSet)
     def wanted(t: String): Boolean = tablesWanted.forall(_.contains(t))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // single-FILE tables like the source fixtures (the streaming staging
     // copies `$dir/events.parquet` as one file) — written with SMALL row
     // groups (8 MB) because a one-task write would otherwise produce one

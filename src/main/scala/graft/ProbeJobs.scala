@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
 
 /** Overhead probe (round 16): for named registered queries, time the two
   * phases the bench's `runOnce` pays — DataFrame CONSTRUCTION (which for
@@ -20,14 +19,8 @@ import org.apache.spark.sql.SparkSession
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val harness = Harness()
+    val spark = harness.spark
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -43,12 +36,15 @@ object ProbeJobs {
       "usage: runMain graft.ProbeJobs <query1,query2,...> (env as Bench)")
     for (name <- args.head.split(",").map(_.trim)) {
       val fn = SparkEntry.queries(name)
-      // two passes like the bench (warm-up then steady-state); report both
-      for (pass <- Seq("warm", "timed")) {
+      // two passes like the bench (warm-up then steady-state); report both.
+      // Harness.run sweeps like the bench (releaseAll included): memos must
+      // not survive the warm→timed boundary here either, or the probe's
+      // timed pass reports the free-riding shape the bench no longer measures
+      for (pass <- Seq("warm", "timed")) harness.run { s =>
         drain()
         jobs.set(0); stages.set(0)
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
+        val df = fn(s, sfDir)
         drain()
         val buildJobs = jobs.get; val buildStages = stages.get
         val t1 = System.nanoTime()
@@ -58,14 +54,8 @@ object ProbeJobs {
         println(f"[probejobs] $name $pass build=${(t1 - t0) / 1e9}%.2fs " +
           f"($buildJobs jobs/$buildStages stages) write=${(t2 - t1) / 1e9}%.2fs " +
           f"(${jobs.get - buildJobs} jobs/${stages.get - buildStages} stages)")
-        // releaseAll like the bench (round 17): memos must not survive the
-        // warm→timed boundary here either, or the probe's timed pass reports
-        // the free-riding shape the bench no longer measures
-        TransientCache.releaseAll(spark)
-        org.apache.spark.sql.graftshim.SessionSweep.sweepStreamingState()
       }
     }
-    TransientCache.releaseAll(spark)
     spark.stop()
   }
 }

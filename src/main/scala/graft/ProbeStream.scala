@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (round 17): phase attribution for the streaming twins' fixed
   * cost. The ProbeJobs view showed each twin costs ~1–2.5 s with only 3–5
   * Spark jobs, so the time is inside the streaming machinery, not the job
@@ -15,14 +13,8 @@ import org.apache.spark.sql.SparkSession
 object ProbeStream {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val harness = Harness()
+    val spark = harness.spark
     spark.read.parquet(s"$sfDir/region.parquet").count()
     require(args.nonEmpty,
       "usage: runMain graft.ProbeStream <query1,query2,...> (env as Bench)")
@@ -41,18 +33,20 @@ object ProbeStream {
           batches.add(f"term@${System.nanoTime() / 1e9}%.3f")
       })
     for (name <- args.head.split(",").map(_.trim)) {
-      for (pass <- Seq("warm", "timed")) {
+      for (pass <- Seq("warm", "timed")) harness.run { s =>
+        // deliver the previous pass's late events (its termination arrives
+        // asynchronously) before clearing, so none land in this pass's log
+        org.apache.spark.sql.graftshim.SessionSweep
+          .drainListenerBus(s.sparkContext)
         batches.clear()
         val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = SparkEntry.queries(name)(s, sfDir)
         val t1 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         val t2 = System.nanoTime()
         println(f"[probestream] $name $pass t0=${t0 / 1e9}%.3f " +
           f"build=${(t1 - t0) / 1e9}%.2fs readback+noop=${(t2 - t1) / 1e9}%.2fs " +
           s"events=[${java.util.List.copyOf(batches).toArray.mkString(", ")}]")
-        TransientCache.releaseAll(spark)
-        org.apache.spark.sql.graftshim.SessionSweep.sweepStreamingState()
       }
     }
     spark.stop()

@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val harness = Harness()
     // Optional subset for local iteration (same convention as
     // SPARK_GRAFT_BENCH_ONLY); the driver sets neither, so its gate always
     // dumps the full registry
@@ -26,27 +17,8 @@ object Verify {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown SPARK_GRAFT_VERIFY_ONLY queries: $unknown")
     }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // operator-internal transient caches are per-query; sweep them so 60+
-      // queries in one session can't accumulate storage blocks. Broadcast
-      // variables are reapable only AFTER a GC (weak refs + ContextCleaner),
-      // so nudge the collector under heap pressure — the Bench session-
-      // hygiene lesson (a 54-query sf10 wave OOM'd with every query passing
-      // in isolation); there is no timed window here, so it is pure safety.
-      TransientCache.release(spark)
-      val rt = Runtime.getRuntime
-      if (rt.totalMemory() - rt.freeMemory() > rt.maxMemory() / 10L * 6L)
-        System.gc()
-    }
+    dump(harness, sfDir, outDir,
+      SparkEntry.queries.keys.filter(n => only.forall(_(n))).toSeq)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -62,6 +34,24 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    harness.spark.stop()
+  }
+
+  /** Write each named query's result as one parquet dir `outDir/<name>`.
+    * Every query runs under [[Harness.run]], so a query's dump cannot
+    * depend on which queries ran before it; a failing query is reported
+    * and skipped.
+    */
+  def dump(harness: Harness, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    new java.io.File(outDir).mkdirs()
+    names.foreach { name =>
+      try harness.run { s =>
+        SparkEntry.queries(name)(s, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    }
   }
 }

@@ -687,7 +687,12 @@ object Dedup {
     // truth joins and decile sums all group on (bands, rpb, ...) so no
     // config can see another's rows.
     val cfgRows = configs.map { case (b, r) => (b.toLong, r.toLong) }
-    val cfgDf = broadcast(cfgRows.toDF("bands", "rpb"))
+    // the truth sides fan out over the configs MAP-SIDE: `inline` of a
+    // literal (bands, rpb) array, so the per-config copy is a Generate, not
+    // a join (a crossJoin against a 3-row frame plans as a
+    // BroadcastNestedLoopJoin)
+    val cfgs = inline(array(cfgRows.map { case (b, r) =>
+      struct(lit(b).as("bands"), lit(r).as("rpb")) }: _*))
     val banded = sigs
       .flatMap { case (gid, n, sg) =>
         cfgRows.iterator.flatMap { case (b, r) =>
@@ -704,7 +709,7 @@ object Dedup {
       .filter(col("ga") < col("gb"))
       .select("bands", "rpb", "ga", "gb").distinct()
       .withColumn("hit", lit(1L))
-    val crossAgg = crossTruth.crossJoin(cfgDf)
+    val crossAgg = crossTruth.select(col("*"), cfgs)
       .join(cand, Seq("bands", "rpb", "ga", "gb"), "left")
       .groupBy("bands", "rpb", "j_decile")
       .agg(sum(col("n_pairs")).as("n_true"),
@@ -714,7 +719,7 @@ object Dedup {
       .select(col("bands"), col("rpb"), explode(col("gids")).as("gid"))
       .distinct()
       .withColumn("alive", lit(1L))
-    val withinAgg = withinGroups.crossJoin(cfgDf)
+    val withinAgg = withinGroups.select(col("*"), cfgs)
       .join(surv, Seq("bands", "rpb", "gid"), "left")
       .groupBy("bands", "rpb")
       .agg(sum(col("n_pairs")).as("n_true"),

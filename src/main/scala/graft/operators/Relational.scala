@@ -491,7 +491,7 @@ object Relational {
 
   /** q28_sql — the SQL entry point: temp views + `spark.sql` with a
     * CORRELATED scalar subquery (Catalyst decorrelates it into an aggregate
-    * + join — assert via PlanAudit that no per-row re-execution survives).
+    * + join — assert via PlanDump that no per-row re-execution survives).
     * Exercises the parser/analyzer surface the DataFrame queries bypass.
     */
   def q28Sql(s: SparkSession, dir: String): DataFrame = {

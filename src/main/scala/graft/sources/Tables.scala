@@ -24,25 +24,34 @@ object Tables {
     * lake catalog instead of a footer listing per job. Keyed by full path —
     * two datasets' tables never collide — and JVM-local, so every bench /
     * verify invocation still infers from the parquet inputs it reads.
+    *
+    * Each entry carries the file/dir modification time it was inferred at:
+    * a path REWRITTEN in the same JVM (possibly with a different schema)
+    * re-infers and REPLACES its entry — a stale user-specified schema would
+    * mask drift as nulls instead of failing, and superseded entries must
+    * not pile up. One driver-side getFileStatus per lookup — no footer
+    * read, no data scan.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
+
+  /** Test probe: cache keys naming `path` (one at most, by construction). */
+  private[graft] def cachedEntries(path: String): Int = {
+    import scala.jdk.CollectionConverters._
+    schemaCache.keySet.asScala.count(_.startsWith(path))
+  }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // cache key carries the file/dir modification time (r16 advice): a
-    // fixture path REWRITTEN with a different schema in the same JVM must
-    // re-infer, not silently read with the stale schema (a user-specified
-    // schema masks drift as nulls instead of failing). One driver-side
-    // getFileStatus per lookup — no footer read, no data scan.
     val mtime =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getFileStatus(p).getModificationTime
       } catch { case _: java.io.IOException => -1L }
-    val schema = schemaCache.computeIfAbsent(s"$path@$mtime",
-      _ => spark.read.parquet(path).schema)
+    val (_, schema) = schemaCache.compute(path, (_, old) =>
+      if (old != null && old._1 == mtime) old
+      else (mtime, spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every registered query must at least EXECUTE on the smallest fixture —
@@ -25,6 +27,25 @@ class RegistrySpec extends AnyFunSuite {
     // SparkEntry.minhashPairsSql / annLshSql / embedNearDupSql /
     // mmThumbsSql / annIvfSql.
     assert(rowsOnly.isEmpty, s"oracle coverage drifted: $rowsOnly")
+  }
+
+  test("one session builder and no regrown probe mains under src/main") {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sources = try files.iterator.asScala.toList
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> java.nio.file.Files.readString(p))
+      finally files.close()
+    assert(sources.nonEmpty, "run from the repo root")
+    val builders = sources.collect {
+      case (p, src) if src.contains("SparkSession.builder") => p.getFileName.toString
+    }
+    assert(builders == List("Harness.scala"),
+      s"sessions must be built by graft.Harness only, found in: $builders")
+    val probes = sources.flatMap { case (_, src) =>
+      """\bobject\s+(Probe\w*)""".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    assert(probes == Set("ProbeData", "ProbeJobs", "ProbeStream"),
+      s"one-off probe mains belong in operator comments and SCALE.md: $probes")
   }
 
   test("entry (flagship) returns rows") {

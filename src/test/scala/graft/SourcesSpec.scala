@@ -68,4 +68,20 @@ class SourcesSpec extends AnyFunSuite {
     assert(stats.map(_.getAs[Long]("n_docs")).sum ==
       graft.sources.Tables.documents(spark, Sf0001).count())
   }
+
+  test("a parquet path rewritten with a new schema re-infers and replaces its cache entry") {
+    val s = spark
+    import s.implicits._
+    val d = Files.createTempDirectory("sources-schema").toString
+    val path = s"$d/t.parquet"
+    Seq((1L, "a")).toDF("id", "name").write.mode("overwrite").parquet(path)
+    assert(graft.sources.Tables(spark, d, "t").columns.toSeq == Seq("id", "name"))
+    Seq((2L, 3.5, true)).toDF("id", "score", "flag")
+      .write.mode("overwrite").parquet(path)
+    val again = graft.sources.Tables(spark, d, "t")
+    assert(again.columns.toSeq == Seq("id", "score", "flag"))
+    assert(again.as[(Long, Double, Boolean)].collect().toSeq == Seq((2L, 3.5, true)))
+    assert(graft.sources.Tables.cachedEntries(path) == 1,
+      "a rewritten path must replace its entry, not add one")
+  }
 }

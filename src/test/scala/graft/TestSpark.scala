@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession for the whole forked test JVM.
+/** One SparkSession for the whole forked test JVM, built by [[Harness]].
   *
   * `local[4, 3]` = 4 executor threads, up to 3 attempts per task — retries on
   * so the crash-chaos suite can exercise the reference's re-execution
@@ -10,27 +10,22 @@ import org.apache.spark.sql.SparkSession
   * local mode via the master string).
   */
 object TestSpark {
-  private var _spark: SparkSession = null
+  private var _harness: Harness = null
 
-  /** Rebuilds if a suite (e.g. the local-cluster chaos soak, which needs its
-    * own multi-process SparkContext) stopped the shared session.
+  /** The suite-wide [[Harness]]; rebuilt with its session if a suite (e.g.
+    * the local-cluster chaos soak, which needs its own multi-process
+    * SparkContext) stopped the shared one.
     */
-  def spark: SparkSession = synchronized {
-    if (_spark == null || _spark.sparkContext.isStopped) {
+  def harness: Harness = synchronized {
+    if (_harness == null || _harness.spark.sparkContext.isStopped) {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      _spark = SparkSession.builder()
-        .master("local[4, 3]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-        .getOrCreate()
+      _harness = new Harness(Harness.session(cores = 4, maxFailures = 3))
     }
-    _spark
+    _harness
   }
+
+  def spark: SparkSession = harness.spark
 
   /** Reference pg corpus (read-only fixtures; FIXTURES.md §A.1). */
   val PgGlob = "/root/reference/src/main/pg-*.txt"

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.SessionSweep
 
@@ -53,7 +55,7 @@ final class Harness(val spark: SparkSession) {
       (confSnapshot.get(k), now.get(k)) match {
         case (Some(v0), Some(v1)) if v0 != v1 => spark.conf.set(k, v0)
         case (Some(v0), None) => spark.conf.set(k, v0)
-        case (None, Some(_)) => try spark.conf.unset(k) catch { case _: Throwable => () }
+        case (None, Some(_)) => try spark.conf.unset(k) catch { case NonFatal(_) => () }
         case _ => ()
       }
     }

@@ -677,7 +677,8 @@ object EventStreams {
     * lists directories; exactly ONE file ⇒ exactly one AvailableNow batch),
     * run the stream into a PARQUET result directory via `foreachBatch`
     * (executors write the sink files — result rows NEVER pass through the
-    * driver, unlike a memory sink), and return a lazy read of the result.
+    * driver, unlike a memory sink), and return a lazy read of the result
+    * with the stream's own schema.
     *
     * `foreachBatch` rather than the parquet file sink because the file sink
     * is Append-only: Append would withhold every window still inside the
@@ -697,47 +698,6 @@ object EventStreams {
       file: String = "events.parquet",
       boundedState: Boolean = false): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val staged = Files.createTempDirectory(s"$prefix-staged")
-    Files.copy(Paths.get(s"$dir/$file"),
-      staged.resolve(file), StandardCopyOption.REPLACE_EXISTING)
-    val outDir = graft.Staging.dir(s, s"stream-out/$prefix")
-    deleteRecursively(new java.io.File(outDir))
-    // State-partition sizing, ADAPTIVE on the staged input (round 14 — the
-    // sf100 decade probe): each state partition costs store init + delta
-    // checkpoint I/O per batch, so a small fixture wants FEW partitions
-    // (8 was measured right up to sf10), but a fixed 8 serializes the
-    // keyed-state work of a 1.5 GB / 60 M-event input onto 8 of 32 cores —
-    // q58's per-user daily counts measured 55 s at sf100 with 8 partitions
-    // vs 33 s adaptive. One partition per 64 MB of staged bytes, clamped to
-    // [8, 32] — the same bytes-per-task sizing any shuffle gets, decided
-    // from the data like the broadcast threshold. The conf is captured at
-    // stream START (cloned session), so restoring it afterwards is safe; at
-    // production scale the caller sizes this like any shuffle.
-    val stagedBytes = Files.size(staged.resolve(file))
-    val stateParts =
-      math.max(8L, math.min(32L, stagedBytes / (64L << 20) + 1L)).toString
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts)
-    // State BACKEND selection, declared + sized (round 15 — the sf1000
-    // probe): the default HDFSBackedStateStore is an in-heap map, and an
-    // AvailableNow pass holds a query's ENTIRE keyed state in one batch
-    // (no intra-batch watermark eviction), so per-entity state must fit in
-    // memory — q58's (user, day) counts measured ~401 M state rows at the
-    // 12.5 GB staged input and OOM'd the 24 g heap in StateStore.put.
-    // ENTITY-KEYED streams therefore switch to the RocksDB provider past
-    // [[RocksDbStagedBytes]]: disk-backed state with an in-memory working
-    // set — exactly what a production cluster configures for entity-keyed
-    // monitors. Callers whose state is STRUCTURALLY bounded declare
-    // `boundedState = true` and keep the cheap in-heap store at ANY input
-    // size (the first cut keyed the choice on bytes alone and taxed q57's
-    // 10-row histogram state with RocksDB's per-batch commit overhead:
-    // 28.2 → 150.1 s at sf1000, measured). The conf is captured at stream
-    // START (cloned session) like the partition count, restored in the
-    // finally.
-    val prevProvider = s.conf.getOption(StateProviderConf)
-    if (!boundedState && stagedBytes > rocksDbThreshold(s))
-      s.conf.set(StateProviderConf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Write-mode contract per OutputMode (r13 advice — Append joined the
     // accepted set with q60 and its terms must be explicit, not inferred):
     //   Complete — each batch carries the full result: overwrite.
@@ -755,8 +715,42 @@ object EventStreams {
       s"runStagedViaFiles: unsupported OutputMode $mode — the foreachBatch " +
         "sink defines semantics only for Complete/Update/Append (see the " +
         "write-mode contract above)")
-    try {
-      val q = build(staged.toString).writeStream
+    val outDir = graft.Staging.dir(s, s"stream-out/$prefix")
+    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+    val prevProvider = s.conf.getOption(StateProviderConf)
+    // Every setup step after the staging dir exists (the copy, the conf
+    // switches, the threshold parse) runs inside the try, so a failure in
+    // any of them still restores the conf and deletes the staged copy; a
+    // failed createTempDirectory has created and changed nothing.
+    val staged = Files.createTempDirectory(s"$prefix-staged")
+    val schema = try {
+      Files.copy(Paths.get(s"$dir/$file"),
+        staged.resolve(file), StandardCopyOption.REPLACE_EXISTING)
+      deleteRecursively(new java.io.File(outDir))
+      val stagedBytes = Files.size(staged.resolve(file))
+      // State partitions: see [[stateParts]]. The conf is captured at
+      // stream START (cloned session), so restoring it afterwards is safe.
+      s.conf.set("spark.sql.shuffle.partitions", stateParts(stagedBytes).toString)
+      // State BACKEND selection, declared + sized (round 15 — the sf1000
+      // probe): the default HDFSBackedStateStore is an in-heap map, and an
+      // AvailableNow pass holds a query's ENTIRE keyed state in one batch
+      // (no intra-batch watermark eviction), so per-entity state must fit in
+      // memory — q58's (user, day) counts measured ~401 M state rows at the
+      // 12.5 GB staged input and OOM'd the 24 g heap in StateStore.put.
+      // ENTITY-KEYED streams therefore switch to the RocksDB provider past
+      // [[RocksDbStagedBytes]]: disk-backed state with an in-memory working
+      // set — exactly what a production cluster configures for entity-keyed
+      // monitors. Callers whose state is STRUCTURALLY bounded declare
+      // `boundedState = true` and keep the cheap in-heap store at ANY input
+      // size (the first cut keyed the choice on bytes alone and taxed q57's
+      // 10-row histogram state with RocksDB's per-batch commit overhead:
+      // 28.2 → 150.1 s at sf1000, measured). Captured at stream START like
+      // the partition count, restored in the finally.
+      if (!boundedState && stagedBytes > rocksDbThreshold(s))
+        s.conf.set(StateProviderConf,
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val stream = build(staged.toString)
+      stream.writeStream
         .outputMode(mode)
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
           val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
@@ -764,7 +758,8 @@ object EventStreams {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
+      stream.schema
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
       prevProvider match {
@@ -775,11 +770,33 @@ object EventStreams {
           if (s.conf.getOption(StateProviderConf).isDefined)
             s.conf.unset(StateProviderConf)
       }
-      Files.deleteIfExists(staged.resolve(file))
-      Files.deleteIfExists(staged)
+      deleteRecursively(staged.toFile)
     }
-    s.read.parquet(outDir)
+    // foreachBatch wrote exactly the stream's schema, so read it back with
+    // that schema instead of paying a footer-inference job (the file source
+    // forces every field nullable either way)
+    s.read.schema(schema).parquet(outDir)
   }
+
+  /** State partitions for a staged input of `stagedBytes`: one per 64 MiB,
+    * capped at 32 — the bytes-per-task sizing any shuffle gets, decided
+    * from the data like the broadcast threshold. AQE does not resize state
+    * stores, so the count is fixed at stream start.
+    *
+    * Each state partition costs a store load, a delta commit and a sink
+    * file per batch, so a few-MB input gets ONE store. The former floor of
+    * 8 was measured (SCALE.md, round 14 Fix 1): on 4 cores q25's 3 600
+    * state rows spent 0.59 s committing 8 stores and 0.03 s committing
+    * one, and the 16 twins at sf0.1 ran 31.7 → 24.8 s. Large inputs still
+    * spread: the sf100 events file (1.5 GB) gets 25, since a fixed 8
+    * serialized q58's per-user daily counts onto 8 of 32 cores (55 s vs
+    * 33 s adaptive). Between those, a large keyed state on fewer 64 MiB
+    * units than cores leaves cores idle (q58 at sf10: 2 stores, 28 %
+    * slower on 4 cores) — an open item, not a reason for a core-count
+    * floor.
+    */
+  private[graft] def stateParts(stagedBytes: Long): Int =
+    math.min(32L, stagedBytes / (64L << 20) + 1L).toInt
 
   private[graft] val StateProviderConf =
     "spark.sql.streaming.stateStore.providerClass"

@@ -37,9 +37,9 @@ object ProbeJobs {
     for (name <- args.head.split(",").map(_.trim)) {
       val fn = SparkEntry.queries(name)
       // two passes like the bench (warm-up then steady-state); report both.
-      // Harness.run sweeps like the bench (releaseAll included): memos must
-      // not survive the warm→timed boundary here either, or the probe's
-      // timed pass reports the free-riding shape the bench no longer measures
+      // Harness.run sweeps like the bench (releaseAll included): no block
+      // survives the warm→timed boundary, so the timed pass counts the
+      // same builds the bench's timed run pays
       for (pass <- Seq("warm", "timed")) harness.run { s =>
         drain()
         jobs.set(0); stages.set(0)

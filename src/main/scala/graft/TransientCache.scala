@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-hygiene registry for operator-internal caches.
@@ -16,10 +18,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * multi-query job) the leaked blocks squeeze execution memory and drive GC;
   * that is the failure mode, not a single query's plan.
   *
+  * Every intermediate lives for one query only, like the reference's
+  * `mr-X-Y` files that one job writes and reads: an artifact with several
+  * consumers in a query is built once, where the query makes it, as a local
+  * value (an eager [[checkpoint]] for a frame), and nothing is shared across
+  * queries.
+  *
   * Contract: operators route every internal materialization through
   * [[cache]] / [[checkpoint]]; a harness (Bench, Verify, tests, or a user's
-  * job runner) calls [[release]] once the query's results are off the
-  * session — dropping every registered block in one sweep. Release is safe
+  * job runner) calls [[releaseAll]] once the query's results are off the
+  * session — dropping every registered block in one sweep. The sweep is safe
   * at any time: unpersist only discards blocks, and any still-lazy plan
   * recomputes from lineage (localCheckpoints are materialized eagerly before
   * registration, so their consumers hold real rows, not lineage).
@@ -28,18 +36,8 @@ object TransientCache {
 
   private val frames = new ConcurrentLinkedQueue[DataFrame]()
   private val rddIds = new ConcurrentLinkedQueue[Integer]()
-  private val memos = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val memoIds = new ConcurrentLinkedQueue[Integer]()
-  private val memoLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  // memo-vs-releaseAll ordering gate: builds run under the shared read side
-  // (concurrent distinct-key builds still parallelize; the read lock is
-  // reentrant, so a build that memoizes a sub-artifact nests fine), and
-  // releaseAll sweeps under the write side — so a sweep cannot interleave
-  // with an in-flight build and miss blocks the build registers after the
-  // sweep passed (they'd otherwise survive until the NEXT releaseAll)
-  private val sweepGate = new java.util.concurrent.locks.ReentrantReadWriteLock()
 
-  /** `.cache()` + register for the next [[release]] sweep. */
+  /** `.cache()` + register for the next [[releaseAll]] sweep. */
   def cache(df: DataFrame): DataFrame = {
     val c = df.cache()
     frames.add(c)
@@ -59,128 +57,27 @@ object TransientCache {
   }
 
   /** Register already-persisted RDD ids (e.g. an operator's own tracked
-    * localCheckpoint) for the next [[release]] sweep.
+    * localCheckpoint) for the next [[releaseAll]] sweep.
     */
   def adoptRddIds(ids: Iterable[Int]): Unit =
     ids.foreach(id => rddIds.add(id))
-
-  /** Memoized shared artifact: build + eagerly checkpoint once per `key`,
-    * then hand the same materialized rows to every later caller until
-    * [[releaseAll]]. This is the in-session analog of a pipeline persisting
-    * a shared intermediate (e.g. the near-duplicate edge set that both the
-    * cluster table and the curated keep-set derive from) to storage: keyed,
-    * bounded (one entry per distinct artifact, never per invocation), and
-    * with an explicit end of life. At 100 TB the same artifact would be a
-    * parquet dataset between jobs; the contract — compute the expensive
-    * similarity join ONCE — is identical.
-    *
-    * Deliberately NOT dropped by per-query [[release]]: shared artifacts
-    * outlive any single consumer, which is their whole point.
-    */
-  def memo(key: String)(build: => DataFrame): DataFrame = {
-    // a hit bound to a stopped session (a harness cycled SparkSessions) is
-    // stale: its checkpoint blocks died with the context — rebuild
-    def liveHit: DataFrame = {
-      val hit = memos.get(key)
-      if (hit != null && !hit.sparkSession.sparkContext.isStopped) hit else null
-    }
-    val fast = liveHit
-    if (fast != null) return fast
-    val gate = sweepGate.readLock()
-    gate.lock()
-    try {
-      // per-key double-checked lock, NOT computeIfAbsent: the build (an
-      // expensive join + localCheckpoint) must never run inside the
-      // ConcurrentHashMap's bin lock, and a build that itself memoizes a
-      // sub-artifact must not deadlock
-      val lock = memoLocks.computeIfAbsent(key, _ => new Object)
-      lock.synchronized {
-        val again = liveHit
-        if (again != null) return again
-        val df = build
-        val sc = df.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val out = df.localCheckpoint(true)
-        (sc.getPersistentRDDs.keySet -- before).foreach(id => memoIds.add(id))
-        memos.put(key, out)
-        out
-      }
-    } finally gate.unlock()
-  }
-
-  /** Test-visible hygiene probe: live per-key memo locks. */
-  private[graft] def memoLockCount: Int = memoLocks.size
-
-  private val valueMemos =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** Driver-side value twin of [[memo]] for non-DataFrame shared artifacts
-    * (e.g. the IVFPQ codebook arrays a k-means train fits): build once per
-    * key, hand the same value to every later caller until [[releaseAll]].
-    * The stored values are plain JVM objects with no session or block
-    * state, so unlike [[memo]] there is no liveness re-check — only the
-    * same double-checked per-key lock so an expensive build (driver-side
-    * k-means over a collected sample) never runs twice or inside the map's
-    * bin lock. Builds must be deterministic (every memo consumer's gate
-    * rests on replay equality), which the r12 fixed-seed/capped-sample
-    * training discipline already guarantees.
-    */
-  def memoValue[T <: AnyRef](key: String)(build: => T): T = {
-    val hit = valueMemos.get(key)
-    if (hit != null) return hit.asInstanceOf[T]
-    val lock = memoLocks.computeIfAbsent("value:" + key, _ => new Object)
-    lock.synchronized {
-      val again = valueMemos.get(key)
-      if (again != null) return again.asInstanceOf[T]
-      val v = build
-      valueMemos.put(key, v)
-      v
-    }
-  }
 
   /** Drop every registered cache and checkpoint block. Harness-facing.
     * Entries from an already-stopped session are discarded silently (a test
     * harness may cycle sessions between queries).
     */
-  def release(spark: SparkSession): Unit = {
+  def releaseAll(spark: SparkSession): Unit = {
     var df = frames.poll()
     while (df != null) {
-      try df.unpersist(false) catch { case _: Throwable => () }
+      try df.unpersist(false) catch { case NonFatal(_) => () }
       df = frames.poll()
     }
     val live = spark.sparkContext.getPersistentRDDs
     var id = rddIds.poll()
     while (id != null) {
       try live.get(id.intValue()).foreach(_.unpersist(false))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       id = rddIds.poll()
     }
-  }
-
-  /** [[release]] plus the memoized shared artifacts — end-of-session sweep.
-    * Runs under [[sweepGate]]'s write side: the sweep waits for in-flight
-    * [[memo]] builds (and blocks new ones) so every registered block is
-    * visible to THIS sweep — none can slip in behind it and linger until
-    * the next one.
-    */
-  def releaseAll(spark: SparkSession): Unit = {
-    release(spark)
-    val gate = sweepGate.writeLock()
-    gate.lock()
-    try {
-      memos.clear()
-      valueMemos.clear()
-      // drop the per-key lock objects too, or they accumulate for the
-      // process lifetime across harness cycles; computeIfAbsent mints a
-      // fresh lock on demand for post-sweep builds
-      memoLocks.clear()
-      val live = spark.sparkContext.getPersistentRDDs
-      var id = memoIds.poll()
-      while (id != null) {
-        try live.get(id.intValue()).foreach(_.unpersist(false))
-        catch { case _: Throwable => () }
-        id = memoIds.poll()
-      }
-    } finally gate.unlock()
   }
 }

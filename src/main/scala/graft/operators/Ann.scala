@@ -807,15 +807,15 @@ object Ann {
     * everything an index CONSUMER needs, which is what makes the persisted
     * tier ([[persistIvfPqIndex]]) a pure serialization of this result.
     *
-    * Both halves are SHARED ARTIFACTS (round 14 — the r13 verdict's
-    * ann_recall task): the codebooks via [[graft.TransientCache.memoValue]]
-    * and the encoded corpus via [[graft.TransientCache.memo]], keyed by
-    * (dir, nCells, m, ksub). ann_ivfpq, ann_ivfpq_refined,
-    * ann_ivfpq_persisted, hybrid_rrf_ivfpq and ann_recall all consume the
-    * SAME index build — exactly like a production deployment, where the
-    * recall gate evaluates the index that shipped, it does not retrain one.
-    * Training is deterministic (fixed-seed k-means over the xxhash64-capped
-    * sample), so sharing changes cost, never answers.
+    * Built once per call, which is once per query: the codebooks are plain
+    * driver-side values and the encoded corpus is one eager
+    * [[graft.TransientCache.checkpoint]], so its consumers (the ADC
+    * candidate joins, or the persisted index's `codes` table) read the
+    * same rows. Training is deterministic (fixed-seed k-means over the
+    * xxhash64-capped sample), so ann_ivfpq, ann_ivfpq_refined,
+    * ann_ivfpq_persisted, hybrid_rrf_ivfpq and ann_recall all evaluate the
+    * same index — exactly like a production deployment, where the recall
+    * gate evaluates the index that shipped, it does not retrain one.
     */
   private def trainEncodeIvfPq(s: SparkSession, dir: String, nCells: Int,
       m: Int, ksub: Int)
@@ -824,8 +824,7 @@ object Ann {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     val c = graft.TransientCache.cache(corpus(s, dir))
-    val (cents, books) = graft.TransientCache.memoValue(
-      s"ivfpq-books:$dir:$nCells:$m:$ksub") {
+    val (cents, books) = {
       val train = c.orderBy(xxhash64(col("vec_id"))).limit(IvfTrainCap)
         .select("vec").collect().map(_.getSeq[Double](0).toArray)
       val cs = fitCentroids(train, nCells, iters = 10)
@@ -840,10 +839,7 @@ object Ann {
           iters = 10))
       (cs, bks)
     }
-    val encoded = graft.TransientCache.memo(
-      s"ivfpq-codes:$dir:$nCells:$m:$ksub") {
-      encodeWith(c, cents, books)
-    }
+    val encoded = graft.TransientCache.checkpoint(encodeWith(c, cents, books))
     (c, cents, books, encoded)
   }
 

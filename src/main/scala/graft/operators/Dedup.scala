@@ -591,24 +591,21 @@ object Dedup {
       configs: Seq[(Int, Int)] = TuneConfigs,
       sampleMod: Option[Int] = None): DataFrame =
     lshTuneOf(s, maybeSample(Tables.documents(s, dir), sampleMod)
-      .select(col("doc_id"), col("text")), threshold, configs,
-      memoKey = Some(s"lshtune:$dir:$threshold:$sampleMod"))
+      .select(col("doc_id"), col("text")), threshold, configs)
 
   /** Body of [[lshTune]] over a caller-supplied (doc_id, text) frame —
     * parameterized on the exact-text collapse for the DedupSpec
-    * differential losslessness test. `memoKey` (set by the dir-based
-    * wrapper) memoizes the config-independent artifacts — the unique-set
-    * group table and the group-level truth — so the two registered harness
-    * queries (dedup_recall = the production config, lsh_tune = the sweep)
-    * build them ONCE per session, exactly as the pre-r16 shape shared the
-    * memoized doc-level edge set; at 100 TB both artifacts are small
-    * parquet datasets written between jobs (|distinct sets| rows and
-    * |verified group pairs| rows — never doc-level).
+    * differential losslessness test. The config-independent artifacts —
+    * the unique-set group table (which feeds the truth, the within-group
+    * counts and the banding) and the group-level truth — are each built
+    * once per query as an eager [[graft.TransientCache.checkpoint]]; at
+    * 100 TB both are small parquet datasets written between jobs
+    * (|distinct sets| rows and |verified group pairs| rows — never
+    * doc-level).
     */
   private[graft] def lshTuneOf(s: SparkSession, docsIn: DataFrame,
       threshold: Double, configs: Seq[(Int, Int)],
-      collapseExact: Boolean = true,
-      memoKey: Option[String] = None): DataFrame = {
+      collapseExact: Boolean = true): DataFrame = {
     import s.implicits._
     // identical-set collapse (round 12, the minhash/minhashEstError 100×
     // finding ×3 configs): every config re-bands UNIQUE sets only, truth
@@ -627,20 +624,15 @@ object Dedup {
         (id, sh, signature(sh), setKey(sh), tn)
       }
       .toDF("doc_id", "sh", "sig", "skey", "tn")
-    def memoOr(suffix: String)(build: => DataFrame): DataFrame = memoKey match {
-      case Some(k) => graft.TransientCache.memo(s"$k:$suffix")(build)
-      case None => graft.TransientCache.cache(build)
-    }
-    val gset = memoOr("gset") {
+    val gset = graft.TransientCache.checkpoint(
       docs.groupBy("skey").agg(
         min(col("doc_id")).as("gid"),
         first(col("sh")).as("sh"),
         first(col("sig")).as("sig"),
-        sum(col("tn")).as("n"))
-    }
+        sum(col("tn")).as("n")))
     // cross-group truth at GROUP level (round 16): the pre-r16 truth side
-    // joined the memoized DOC-level [[similarityEdges]] pair set back to
-    // groups — recall-correct, but that artifact is quadratic inside
+    // joined a DOC-LEVEL exact pair set back to groups — recall-correct,
+    // but that artifact is quadratic inside
     // replica quasi-cliques (at the sf1000 fixture it would materialize
     // ~10¹¹ doc pairs just to count what is arithmetically na·nb per group
     // pair). All members of a set-group share ONE shingle set, so a group
@@ -650,7 +642,7 @@ object Dedup {
     // — the identical doc-level truth mass, never the doc-level rows. The
     // decile stays the gate's integer arithmetic over the rep shingle sets
     // (never a re-floor of the verified double).
-    val crossTruth = memoOr("truth") {
+    val crossTruth = graft.TransientCache.checkpoint {
       // distinctSets: one rep per setKey group ⇒ md5-distinct shingle sets
       // by construction, so the generator's internal identical-set collapse
       // would be all singletons — skip its exchange (round 17)
@@ -1116,32 +1108,6 @@ object Dedup {
     (gset.select(col("gid"), col("ids")), verified)
   }
 
-  /** dedup_clusters — connected components of the near-duplicate graph: the
-    * pipeline-facing dedup artifact (one surviving cluster_id per document;
-    * keep `doc_id == cluster_id`, drop the rest). Edges carry the
-    * exact-recall [[jaccard3]] shingle semantics, propagated at GROUP level
-    * over one representative per distinct shingle set ([[groupGraph]]);
-    * components come from Pregel-style MIN-LABEL propagation
-    * ([[minLabelPropagate]]) and members inherit their group's label.
-    */
-  /** The DOC-LEVEL near-duplicate edge set (exact-recall [[jaccard3]] pairs)
-    * as a SHARED artifact: computed + materialized once per (dir, threshold)
-    * and reused by every consumer in the session. Consumers that only need
-    * connectivity should prefer [[groupGraph]] (clusters moved there round
-    * 13 — doc-level pairs go quadratic inside replica quasi-cliques), and
-    * the recall harness moved to GROUP-level truth in round 16 ([[lshTuneOf]]
-    * counts na·nb per verified group pair instead of joining this artifact);
-    * this remains the artifact for consumers that need the PAIRS themselves
-    * (pair audits, downstream joins keyed by doc pair). At 100 TB it is a
-    * parquet dataset written between jobs; `TransientCache.memo` is its
-    * in-session equivalent.
-    */
-  def similarityEdges(s: SparkSession, dir: String, threshold: Double = 0.5,
-      sampleMod: Option[Int] = None): DataFrame =
-    graft.TransientCache.memo(s"jaccard3-edges:$dir:$threshold:$sampleMod") {
-      jaccard3(s, dir, threshold, sampleMod).select(col("doc1"), col("doc2"))
-    }
-
   /** Sorted-neighborhood comparison window: each document is compared to
     * this many predecessors in the (n_chars, doc_id) sort order.
     */
@@ -1241,23 +1207,21 @@ object Dedup {
   /** Shared GROUP-LEVEL near-duplicate graph over the [[jaccard3]] shingle
     * semantics at `threshold`: (membership(doc_id, gid), edges(g1, g2)),
     * where gid = min doc_id of an identical-shingle-set group and edges are
-    * the verified cross-group matches. Memoized + checkpointed once per
-    * (dir, threshold) as ONE tagged frame (kind "m" | "e" over two longs) —
-    * a single build and a single checkpoint serve both consumers; at 100 TB
-    * this artifact is one small parquet dataset written between jobs, the
-    * group-level analog of [[similarityEdges]].
+    * the verified cross-group matches. Built once per query as ONE tagged
+    * frame (kind "m" | "e" over two longs) behind one eager
+    * [[graft.TransientCache.checkpoint]], so a single build serves both
+    * consumers; at 100 TB this artifact is one small parquet dataset
+    * written between jobs.
     */
   private def groupGraph(s: SparkSession, dir: String,
       threshold: Double): (DataFrame, DataFrame) = {
+    val docsT = Tables.documents(s, dir)
+      .select(col("doc_id"), col("text"))
+      // null text -> no shingles -> outside the graph (the typed map
+      // guard every tokenize pass carries)
+      .filter(col("text").isNotNull)
     val combined =
-      graft.TransientCache.memo(s"jaccard3-groupgraph:$dir:$threshold") {
-        val docsT = Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"))
-          // null text -> no shingles -> outside the graph (the typed map
-          // guard every tokenize pass carries)
-          .filter(col("text").isNotNull)
-        groupGraphOf(s, docsT, threshold)
-      }
+      graft.TransientCache.checkpoint(groupGraphOf(s, docsT, threshold))
     (combined.filter(col("kind") === "m")
        .select(col("a").as("doc_id"), col("b").as("gid")),
      combined.filter(col("kind") === "e")
@@ -1329,6 +1293,14 @@ object Dedup {
     }
   }
 
+  /** dedup_clusters — connected components of the near-duplicate graph: the
+    * pipeline-facing dedup artifact (one surviving cluster_id per document;
+    * keep `doc_id == cluster_id`, drop the rest). Edges carry the
+    * exact-recall [[jaccard3]] shingle semantics, propagated at GROUP level
+    * over one representative per distinct shingle set ([[groupGraph]]);
+    * components come from Pregel-style MIN-LABEL propagation
+    * ([[minLabelPropagate]]) and members inherit their group's label.
+    */
   def clusters(s: SparkSession, dir: String, threshold: Double = 0.5,
       maxRounds: Int = 50, pairs: Option[DataFrame] = None): DataFrame = pairs match {
     case Some(p) =>
@@ -1890,8 +1862,9 @@ object Dedup {
 
   /** dedup_recall — the banding-recall harness for the MinHash tier, the
     * dedup-family analog of ann_recall: ground truth is the recall-1
-    * prefix-filter pair set ([[similarityEdges]] — same shingle semantics
-    * as [[minhash]], candidate generation provably complete), and each
+    * prefix-filter pair set ([[jaccard3]]'s pairs, counted per group pair
+    * by [[lshTuneOf]] — same shingle semantics as [[minhash]], candidate
+    * generation provably complete), and each
     * true pair is checked against the pairs the LSH tier actually
     * returned. Reported per similarity decile — the empirical S-curve
     * ((16 bands × 4 rows) ⇒ P[caught] = 1−(1−j⁴)¹⁶) every LSH deployment

@@ -131,7 +131,7 @@ class AnnSpec extends AnyFunSuite {
     val again = Ann.pqTopK(spark, Sf0001, nQueries = 4, k = 10).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id")))
     assert(again.toSet == rows.toSet)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("pqTopK: a planted near-identical twin retrieves at rank 1") {
@@ -140,7 +140,7 @@ class AnnSpec extends AnyFunSuite {
       .map(r => r.getAs[Int]("rank") -> r.getAs[Long]("neighbor_id")).toMap
     // ADC distance to the twin is ~0 in every subspace: it must rank first
     assert(got(1) == 1L, s"twin not at rank 1: $got")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("ivfPqTopK: candidates come from probed cells; recall floor; twin at rank 1") {
@@ -157,14 +157,14 @@ class AnnSpec extends AnyFunSuite {
     val got = rows.map(r => (r._1, r._3)).toSet
     val recall = exact.intersect(got).size.toDouble / exact.size
     assert(recall > 0.1, s"IVFPQ recall vs exact L2 suspiciously low: $recall")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
     // a planted near-identical twin lands in the query's own cell with a
     // near-zero residual distance: it must rank first
     val dir = plantTwinCorpus("ivfpq-twin", seed = 200)
     val twin = Ann.ivfPqTopK(spark, dir, nQueries = 1, k = 3, nCells = 2, nProbe = 1)
       .collect().map(r => r.getAs[Int]("rank") -> r.getAs[Long]("neighbor_id")).toMap
     assert(twin(1) == 1L, s"twin not at rank 1: $twin")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("ivfPqRefinedTopK: exact re-rank never loses recall vs the plain ADC ranking") {
@@ -194,7 +194,7 @@ class AnnSpec extends AnyFunSuite {
       assert(byRank.zip(byRank.tail).forall { case (a, b) => a <= b + 1e-12 },
         s"query $q: refined neighbors not in ascending exact distance")
     }
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("appendToIvfPqIndex: append-built codes == full-build codes, bit for bit") {
@@ -238,7 +238,7 @@ class AnnSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("UPDATE"), e.getMessage)
     assert(codes(dirB) === codes(dirA), "failed update must not mutate the index")
-    TransientCache.release(s)
+    TransientCache.releaseAll(s)
   }
 
   test("annDimAblation: per-width recall equals a driver-side truncation model") {
@@ -267,7 +267,7 @@ class AnnSpec extends AnyFunSuite {
       .mapValues(_.map(_._2._2).sum).toMap
     assert(byDim(8L) < byDim(32L),
       s"8-dim retrieval should recall less than 32-dim: $byDim")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("hardNegatives: top-k label-mismatched neighbors == driver-side model") {
@@ -289,7 +289,7 @@ class AnnSpec extends AnyFunSuite {
     val brute = Ann.bruteTopK(spark, Sf0001).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
     assert(got.exists { case (q, d, _) => !brute.contains((q, d)) })
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("knnLabelVote: prediction equals a driver-side majority vote over bruteTopK") {
@@ -311,7 +311,7 @@ class AnnSpec extends AnyFunSuite {
         r.getAs[Long]("correct"))).toSet
     assert(got === expect)
     assert(got.size == 8)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("ivfPqPersistedTopK: the parquet index round-trip is bit-identical") {
@@ -327,7 +327,7 @@ class AnnSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Int]("rank"))).toSet
     assert(persisted === inSession)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("embedNearDup finds planted near-identical vectors, nothing else") {
@@ -374,7 +374,7 @@ class AnnSpec extends AnyFunSuite {
     val recall = got.map(_._1).count(exact).toDouble / exact.size
     assert(recall >= 0.5, s"multi-table LSH recall vs exact pairs too low: $recall")
     assert(got.map(_._1).forall(exact), "emitted pair not in the exact >=0.4 set")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("jlProject: coordinates == driver-side ordered dot with the seed-7 planes") {
@@ -580,7 +580,7 @@ class AnnSpec extends AnyFunSuite {
     // list only (otherwise this is just one ranker renamed)
     assert(got.exists(_._3 == -1) || got.exists(_._4 == -1),
       "every fused doc appeared in both lists — fusion untested")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("hybridRrfIvfPq: fuses the lexical replay with the refined tier's own ranks") {
@@ -624,7 +624,7 @@ class AnnSpec extends AnyFunSuite {
     }.toSet
     assert(got === expect)
     assert(got.size == queries.length * 10)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("annRecall: counts match a driver-side intersection of the tier lists") {
@@ -652,7 +652,7 @@ class AnnSpec extends AnyFunSuite {
     // the harness is non-vacuous: some tier misses something somewhere, and
     // recall stays above the floor the tiers' own specs already pin
     assert(got.values.forall { case (_, h, _) => h >= 0 && h <= 10 })
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("mmrRerank: selection order == driver-side greedy MMR replay") {
@@ -684,6 +684,6 @@ class AnnSpec extends AnyFunSuite {
     val plain = Ann.bruteTopK(spark, Sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got != plain, "MMR == plain top-10 everywhere — diversity term inert")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 }

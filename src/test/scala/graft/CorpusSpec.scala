@@ -877,6 +877,6 @@ class CorpusSpec extends AnyFunSuite {
     // vocab-matched words can never exceed the word total (the sf0.001
     // fixture happens to be 100% in-domain, so equality is legitimate)
     assert(got.forall(t => t._5 <= t._4))
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 }

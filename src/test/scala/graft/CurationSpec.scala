@@ -583,7 +583,7 @@ class CurationSpec extends AnyFunSuite {
     // the fixture exercises every gate: some docs fail each dimension
     assert(rows.values.exists(!_._1) && rows.values.exists(!_._2)
       && rows.values.exists(_._3) && rows.values.exists(!_._4))
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   // ----------------------------------------------------------------- tfidf
@@ -977,6 +977,6 @@ class CurationSpec extends AnyFunSuite {
     // both halves are populated and every event landed in exactly one bin
     assert(dRef > 0 && dCur > 0)
     assert(got.toSeq.map(_._4).sum == dRef && got.toSeq.map(_._5).sum == dCur)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 }

@@ -190,7 +190,7 @@ class DedupSpec extends AnyFunSuite {
     val df = Dedup.dedupRecall(spark, dir, sampleMod = Some(m))
     // the deterministic sample filter sits in the scan stage of the plan
     // (before any shingling), not as a post-hoc pair filter. Since r16 the
-    // recall harness's scan lives inside the memoized config-independent
+    // recall harness's scan lives inside the checkpointed config-independent
     // artifact build (gset + group truth), so the query's own executed plan
     // reads checkpointed rows; the scan-stage property is asserted on
     // minhash's plan, which composes the SAME maybeSample(doc scan) frame
@@ -444,7 +444,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got.count() == n.toLong * (n - 1) / 2)
     val sample = got.filter(col("doc1") === 500L && col("doc2") === 501L).collect()
     assert(sample.length == 1 && sample.head.getAs[Double]("jaccard") == 1.0)
-    graft.TransientCache.release(spark)
+    graft.TransientCache.releaseAll(spark)
   }
 
   test("minhash hot-bucket cap: a boilerplate black hole is dropped, exact pass catches it") {
@@ -593,7 +593,7 @@ class DedupSpec extends AnyFunSuite {
     // fixture's planted cross-source duplicates make at least one pair hot
     assert(got.size == sources.size * (sources.size - 1) / 2)
     assert(got.exists(_._5 > 0), "no source pair shares a shingle — vacuous")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("groupGraph exact-text collapse is lossless: collapse on/off produce " +
@@ -639,7 +639,7 @@ class DedupSpec extends AnyFunSuite {
       assert(on.count(_._1 == "m") == texts.size,
         s"membership rows != docs at seed $seed")
     }
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("minhash-family exact-text collapse is lossless: collapse on/off " +
@@ -696,7 +696,7 @@ class DedupSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3), r.getLong(4), r.getDouble(5))).toSet
       diff("lshTune", lt(true), lt(false))
-      TransientCache.release(spark)
+      TransientCache.releaseAll(spark)
     }
   }
 }

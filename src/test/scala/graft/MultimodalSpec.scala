@@ -155,7 +155,7 @@ class MultimodalSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("asset_id"), r.getAs[String]("media_type"),
         r.getAs[Long]("bytes"), r.getAs[Long]("shard"), r.getAs[Long]("shard_offset")))
     assert(coalesced.toSet == rows.toSet)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("imagePhashPairs: pipeline == straight-line driver replay; planted " +
@@ -214,7 +214,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(variantPairs.exists(_._3 > 0),
       "perturbation flipped no bits at fixture scale — raise the delta")
     assert(got.forall(_._3 <= Multimodal.PhashMaxHamming))
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("imagePhashPairs: the hot-bucket cap actually bites on a degenerate corpus") {
@@ -236,6 +236,6 @@ class MultimodalSpec extends AnyFunSuite {
     val capped = Multimodal.imagePhashPairs(spark, dir, maxBucket = 5).collect()
     assert(capped.isEmpty,
       s"cap=5 should drop the degenerate buckets, got ${capped.length} pairs")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 }

@@ -99,7 +99,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(!plan.contains("CartesianProduct"), s"$q: cartesian fallback")
       assert(plan.contains("BroadcastHashJoin"),
         s"$q: expected the bounded side to broadcast-hash-join")
-      TransientCache.release(spark)
+      TransientCache.releaseAll(spark)
     }
   }
 
@@ -130,7 +130,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "prefix filtering must stay an equi-join on token ids")
     assert(plan.contains("keys=[tids"),
       "the identical-set collapse must group on the encoded int arrays")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("hybrid_rrf: lexical arm is a postings equi-join, never a corpus jaccard scan") {
@@ -150,7 +150,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"),
       "query postings must broadcast into the corpus postings scan")
     assert(!plan.contains("CartesianProduct"), "cartesian fallback")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("substring_scrub: dictionary-scale shared grams broadcast into the " +
@@ -174,7 +174,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!finalPlan.contains("SortMergeJoin"),
       "a join fell back to sort-merge at dictionary-scale shared grams")
     assert(!finalPlan.contains("CartesianProduct"), "cartesian fallback")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("hybrid_rrf_ivfpq: dense candidates stay cell-bucketed, fusion stays broadcast") {
@@ -186,7 +186,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), "cartesian fallback")
     assert(plan.contains("BroadcastHashJoin"),
       "expected the encoded corpus to broadcast-hash-join the ADC probe table")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("quality_band_keep: thresholds broadcast back; scored stream never window-sorted") {
@@ -198,7 +198,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
       "per-source thresholds must broadcast back onto the scored stream")
     assert(!plan.contains("CartesianProduct"), "cartesian fallback")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("rag_context_pack: the candidate pool is a TakeOrdered, never a corpus sort") {
@@ -207,7 +207,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the pack window then covers only the constant ≤ poolK-row pool
     assert(plan.contains("TakeOrderedAndProject"),
       "the BM25 pool must be a distributed top-k, not a global sort")
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("lsh_tune and minhash_est_error: banding joins stay equi, never all-pairs") {
@@ -216,7 +216,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(!plan.contains("CartesianProduct"), s"$q: cartesian fallback")
       assert(!plan.contains("BroadcastNestedLoopJoin"),
         s"$q: candidate generation must stay a (band, bkey) equi-join")
-      TransientCache.release(spark)
+      TransientCache.releaseAll(spark)
     }
   }
 
@@ -228,7 +228,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(plan.contains("WindowGroupLimit"),
         s"$q: expected map-side WindowGroupLimit pruning")
       assert(!plan.contains("CartesianProduct"), s"$q: cartesian fallback")
-      TransientCache.release(spark)
+      TransientCache.releaseAll(spark)
     }
   }
 

@@ -29,13 +29,18 @@ class RegistrySpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty, s"oracle coverage drifted: $rowsOnly")
   }
 
-  test("one session builder and no regrown probe mains under src/main") {
+  private def mainSources: List[(java.nio.file.Path, String)] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val sources = try files.iterator.asScala.toList
       .filter(_.toString.endsWith(".scala"))
       .map(p => p -> java.nio.file.Files.readString(p))
       finally files.close()
     assert(sources.nonEmpty, "run from the repo root")
+    sources
+  }
+
+  test("one session builder and no regrown probe mains under src/main") {
+    val sources = mainSources
     val builders = sources.collect {
       case (p, src) if src.contains("SparkSession.builder") => p.getFileName.toString
     }
@@ -46,6 +51,15 @@ class RegistrySpec extends AnyFunSuite {
     }.toSet
     assert(probes == Set("ProbeData", "ProbeJobs", "ProbeStream"),
       s"one-off probe mains belong in operator comments and SCALE.md: $probes")
+  }
+
+  test("no global memo registry regrown under src/main") {
+    // an artifact lives for one query as a local value or checkpoint
+    val memos = mainSources.collect {
+      case (p, src) if Seq("TransientCache.memo", "memoValue", "sweepGate")
+          .exists(src.contains) => p.getFileName.toString
+    }
+    assert(memos.isEmpty, s"global memo registry regrown in: $memos")
   }
 
   test("entry (flagship) returns rows") {

@@ -108,7 +108,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("doc1"), r.getAs[Long]("doc2"))).toSet
     assert(streamed == batch)
     assert(streamed.nonEmpty)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("incremental EMBED near-dup: streaming pair set == batch embedNearDup") {
@@ -132,7 +132,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2"))).toSet
     assert(streamed == batch)
     assert(streamed.nonEmpty)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("incremental IMAGE phash: streaming pair set == batch imagePhashPairs") {
@@ -157,7 +157,7 @@ class StreamingSpec extends AnyFunSuite {
         r.getAs[Int]("hamming"))).toSet
     assert(streamed == batch)
     assert(streamed.nonEmpty)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("advancePhashBucket lifecycle: hamming verify, poison at cap, tombstone persists") {
@@ -421,7 +421,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.size == 10)
     // non-vacuous: both halves counted something
     assert(streamed.exists(_._4 > 0) && streamed.exists(_._5 > 0))
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("streaming anomaly twin: q58 table equals batch anomaly_days row-for-row") {
@@ -461,7 +461,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = rows(graft.operators.Corpus.heavyHitters(spark, Sf0001))
     assert(streamed === batch)
     assert(streamed.size == graft.operators.Corpus.HhTopK)
-    TransientCache.release(spark)
+    TransientCache.releaseAll(spark)
   }
 
   test("streaming rolling actives: bounded pass equals the batch inverted-window answer") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line `{"metric":"total","value":N,"unit":"sec",
   * "calib_windows":[{"i":16,"after":name,"sec":s},...],
@@ -40,7 +42,7 @@ object Bench {
     // Warm the JVM/codegen once on the smallest table so the first timed
     // query doesn't pay one-time session costs.
     try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // Optional subset for local iteration: SPARK_GRAFT_BENCH_ONLY=q1_agg,wc
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -121,7 +123,7 @@ object Bench {
                 System.err.println(f"[bench] $name outlier ($t1%.2fs vs warm $w%.2fs), re-timing")
                 // the confirmation run is best-effort: a transient failure
                 // there must not discard the valid measurement we hold
-                val t2 = try runOnce() catch { case _: Throwable => t1 }
+                val t2 = try runOnce() catch { case NonFatal(_) => t1 }
                 math.min(t1, t2)
               } else t1
             // the warm-up IS a complete execution (it just also pays one-off
@@ -179,7 +181,7 @@ object Bench {
     try {
       Files.createDirectories(Paths.get("target"))
       Files.writeString(Paths.get("target/bench_local.json"), out + "\n")
-    } catch { case _: Throwable => () } // read-only cwd must not fail the bench
+    } catch { case NonFatal(_) => () } // read-only cwd must not fail the bench
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

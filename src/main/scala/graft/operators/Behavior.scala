@@ -392,16 +392,12 @@ object Behavior {
     * distinct), both joins on bounded-growth keys.
     */
   def churnWeeks(s: SparkSession, dir: String): DataFrame = {
-    val sc = s.sparkContext
-    val uw0 = Tables.events(s, dir)
-      .select(col("user_id"),
-        expr("(unix_micros(ts) DIV 86400000000) DIV 7").as("week"))
-      .distinct()
     // both join sides read the distinct pair set — checkpoint it once so
     // the events scan + distinct run once, not per reference
-    val before = sc.getPersistentRDDs.keySet
-    val uw = uw0.localCheckpoint(true)
-    graft.TransientCache.adoptRddIds((sc.getPersistentRDDs.keySet -- before).toSet)
+    val uw = graft.TransientCache.checkpoint(Tables.events(s, dir)
+      .select(col("user_id"),
+        expr("(unix_micros(ts) DIV 86400000000) DIV 7").as("week"))
+      .distinct())
     val next = uw.select(col("user_id"), (col("week") - 1L).as("week"),
       lit(1L).as("survives"))
     uw.join(next, Seq("user_id", "week"), "left")

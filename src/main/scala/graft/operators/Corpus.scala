@@ -1220,14 +1220,10 @@ object Corpus {
     */
   private def bpeLearn(s: SparkSession, dir: String, rounds: Int)
       : (DataFrame, Seq[(Long, String, String, String, Long)]) = {
-    val sc = s.sparkContext
-    val words0 = Tables.documents(s, dir)
+    val words = graft.TransientCache.checkpoint(Tables.documents(s, dir)
       .select(explode(split(trim(col("text")), "\\s+")).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    val before = sc.getPersistentRDDs.keySet
-    val words = words0.localCheckpoint(true)
-    graft.TransientCache.adoptRddIds((sc.getPersistentRDDs.keySet -- before).toSet)
+      .groupBy("word").agg(count(lit(1)).as("freq")))
     val maxLen = words.agg(max(length(col("word")))).head.getInt(0)
     require(maxLen <= BpeMaxSymbols,
       s"bpe_merges: word of length $maxLen exceeds the oracle's " +

@@ -1305,7 +1305,7 @@ object Dedup {
       maxRounds: Int = 50, pairs: Option[DataFrame] = None): DataFrame = pairs match {
     case Some(p) =>
       // caller-supplied doc-level pair set: propagate directly on documents
-      minLabelPropagate(s, p.select(col("doc1"), col("doc2")),
+      minLabelPropagate(p.select(col("doc1"), col("doc2")),
         Tables.documents(s, dir)
           .select(col("doc_id"), col("doc_id").as("cluster_id")),
         maxRounds)
@@ -1322,7 +1322,7 @@ object Dedup {
       // gid = min member doc_id, so the component-min group label IS the
       // component-min doc_id: doc-level cluster ids are bit-identical.
       val (membership, gEdges) = groupGraph(s, dir, threshold)
-      val gLabels = minLabelPropagate(s,
+      val gLabels = minLabelPropagate(
         gEdges.select(col("g1").as("doc1"), col("g2").as("doc2")),
         membership.select(col("gid").as("doc_id")).distinct()
           .select(col("doc_id"), col("doc_id").as("cluster_id")),
@@ -1347,25 +1347,12 @@ object Dedup {
     * the node id); the driver only compares label-sum convergence scalars,
     * never rows.
     */
-  private def minLabelPropagate(s: SparkSession, pairs: DataFrame,
+  private def minLabelPropagate(pairs: DataFrame,
       initLabels: DataFrame, maxRounds: Int): DataFrame = {
-    val sc = s.sparkContext
-    // per-round checkpoints are freed as soon as their successor round is
-    // materialized (the successor's blocks are real rows, not lineage), so
-    // the loop holds at most two rounds of label blocks at any time
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(true)
-      (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
-    def free(ids: Set[Int]): Unit = {
-      val live = sc.getPersistentRDDs
-      ids.foreach(id => live.get(id).foreach(_.unpersist(false)))
-    }
     // edges materialized once: every round re-reads them, and whatever
     // produced the pair set must never re-run inside the loop
     val p = pairs.select(col("doc1"), col("doc2"))
-    val (edges, edgeIds) = checkpointTracked(
+    val edges = graft.TransientCache.checkpoint(
       p.union(p.select(col("doc2"), col("doc1"))).toDF("u", "v"))
     // localCheckpoint each round: without it, round r's logical plan nests
     // all r-1 previous rounds and Catalyst re-optimizes the whole tower
@@ -1376,12 +1363,7 @@ object Dedup {
     // so ONE job per round both materializes the checkpoint blocks and
     // returns the sum — the eager form paid a separate materialization job
     // per round just to then re-read the fresh blocks for the sum.
-    def checkpointLazyTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(false)
-      (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
-    var (labels, labelIds) = checkpointLazyTracked(initLabels)
+    var labels = graft.TransientCache.checkpoint(initLabels, eager = false)
     // labels are non-negative and only ever decrease, so the label sum is a
     // strictly decreasing convergence measure (fixpoint = sum unchanged)
     def labelSum(df: DataFrame): Long =
@@ -1404,21 +1386,21 @@ object Dedup {
     // the convergence-confirm barrier then pays two no-op propagation
     // shuffles instead of one, and dedup_clusters measured +5 jobs for it.
     // The same argument holds at 100 TB: shuffle count dominates barrier
-    // count for this loop.
+    // count for this loop. Each round is unpinned as soon as its successor
+    // is materialized (the successor's blocks are real rows, not lineage),
+    // so the loop holds at most two rounds of label blocks at any time.
     while (curSum != prevSum && rounds < maxRounds) {
-      val (next, nextIds) = checkpointLazyTracked(step(labels))
+      val next = graft.TransientCache.checkpoint(step(labels), eager = false)
       prevSum = curSum
       curSum = labelSum(next)
-      free(labelIds)
+      graft.TransientCache.unpin(labels)
       labels = next
-      labelIds = nextIds
       rounds += 1
     }
     // the returned labels are checkpointed rows with no lineage back to the
-    // edges; release the edge blocks now and register the result blocks for
-    // the harness's post-action sweep
-    free(edgeIds)
-    graft.TransientCache.adoptRddIds(labelIds)
+    // edges; unpin the edge blocks now (the result's go in the harness's
+    // post-action sweep)
+    graft.TransientCache.unpin(edges)
     // fail LOUDLY on non-convergence: silently-wrong cluster ids would let
     // duplicate documents through the curation keep-set downstream
     if (curSum != prevSum)

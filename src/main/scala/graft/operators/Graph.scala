@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
+import graft.TransientCache
 import graft.sources.Tables
 
 /** Graph analytics over the user↔item interaction graph implied by the
@@ -42,39 +44,12 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** Eager localCheckpoint that reports the RDD ids it pinned, so iterative
-    * loops can free superseded rounds and hand the survivors to
-    * `TransientCache` (the session-hygiene owner). Shared by every Graph
-    * operator that re-reads a derived frame: a checkpoint turns "N
-    * references re-derive the whole upstream subtree N times" into one
-    * materialization + N cheap reads — the difference between scanning the
-    * events table once and six times at 100 TB.
-    */
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) =
-    checkpointTracked(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** As [[checkpointTracked]] with an explicit storage level. Edge lists
-    * below [[EdgeSpillBytes]] use MEMORY_AND_DISK_SER: a 100 TB-derived
-    * graph's edge checkpoint is the largest resident block in any iterative
-    * operator, UnsafeRows serialize ~3× narrower than their object form,
-    * and every round re-reads the whole thing — the sf100 probe measured
-    * the deserialized form OOMing pagerank outright (120 M bidirected edges
-    * ≈ 12 GB of row objects on a 24 g heap) where the serialized form fits
-    * and streams. Past the threshold the checkpoint leaves the block
-    * manager entirely — see [[edgeCheckpoint]].
-    */
-  private def checkpointTracked(df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(true, level)
-    (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-  }
-
-  private def free(s: SparkSession, ids: Set[Int]): Unit = {
-    val live = s.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(false)))
-  }
+  // Every Graph operator that re-reads a derived frame pins it with
+  // TransientCache.checkpoint: a checkpoint turns "N references re-derive
+  // the whole upstream subtree N times" into one materialization + N cheap
+  // reads — the difference between scanning the events table once and six
+  // times at 100 TB. Loops unpin a superseded round as soon as its
+  // successor is materialized; the rest goes in the harness's sweep.
 
   /** Source-bytes threshold past which the EDGE checkpoint leaves the
     * block manager for a bucketed snappy-parquet spill ([[edgeCheckpoint]]).
@@ -120,10 +95,12 @@ object Graph {
   }
 
   /** Handle on a materialized edge list: `df` re-reads it cheaply every
-    * round, `release()` frees the storage once the loop's outputs are
-    * themselves checkpointed.
+    * round, `barrierLevel` is the storage level the loop's |V|-sized round
+    * barriers take at the same scale, and `release()` frees the storage
+    * once the loop's outputs are themselves checkpointed.
     */
-  private[graft] final case class EdgeCp(df: DataFrame, release: () => Unit)
+  private[graft] final case class EdgeCp(df: DataFrame,
+      barrierLevel: StorageLevel, release: () => Unit)
 
   /** Materialize the edge list for an iterative loop, in the storage form
     * `dir`'s scale calls for.
@@ -186,15 +163,28 @@ object Graph {
       // reads as absent) — restored by an explicit set on release
       val prior = s.conf.get(orderingConf)
       s.conf.set(orderingConf, "true")
-      EdgeCp(s.table(name), () => {
+      // rank barriers are |V|-sized — at spill scale (~400 M nodes at the
+      // sf1000 probe) the default deserialized MEMORY_AND_DISK object rows
+      // OOM'd the init checkpoint outright (16-24 GB of row objects on a
+      // 24 g heap, measured round 16). DISK_ONLY streams serialized blocks
+      // straight off the disk store (no re-inflate path exists there) and
+      // each barrier is read exactly ONCE per stride tower, so the memory
+      // level buys nothing past the threshold.
+      EdgeCp(s.table(name), StorageLevel.DISK_ONLY, () => {
         s.sql(s"DROP TABLE IF EXISTS $name")
         s.conf.set(orderingConf, prior)
       })
     } else {
       val arranged = if (coLocate) edges.repartition(col(key)) else edges
-      val (df, ids) = checkpointTracked(arranged,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      EdgeCp(df, () => free(s, ids))
+      // serialized: a 100 TB-derived graph's edge checkpoint is the largest
+      // resident block in any iterative operator, UnsafeRows serialize ~3×
+      // narrower than their object form, and every round re-reads the whole
+      // thing — the sf100 probe measured the deserialized form OOMing
+      // pagerank outright (120 M bidirected edges ≈ 12 GB of row objects on
+      // a 24 g heap) where the serialized form fits and streams
+      val df = TransientCache.checkpoint(arranged, StorageLevel.MEMORY_AND_DISK_SER)
+      // below the threshold the rank barriers stay hot in memory
+      EdgeCp(df, StorageLevel.MEMORY_AND_DISK, () => TransientCache.unpin(df))
     }
 
   /** Item node ids live at ItemBase + k so user and item ids share one
@@ -253,7 +243,6 @@ object Graph {
     * a user, node ≥ 10⁶ an item.
     */
   def pagerank(s: SparkSession, dir: String, rounds: Int = Rounds): DataFrame = {
-    def free(ids: Set[Int]): Unit = Graph.free(s, ids)
     // the edge list is co-located on the per-round join key (in-memory:
     // pre-checkpoint repartition; spilled: bucketBy) so every round's
     // ranks⋈edges reuses one arrangement and only the rank side moves —
@@ -263,19 +252,11 @@ object Graph {
     val ecp = edgeCheckpoint(s, dir, edgesWithDeg(s, dir), "src", coLocate = true)
     try {
     val edges = ecp.df
-    // rank barriers are |V|-sized — at spill scale (~400 M nodes at the
-    // sf1000 probe) the default deserialized MEMORY_AND_DISK object rows
-    // OOM'd the init checkpoint outright (16-24 GB of row objects on a
-    // 24 g heap, measured round 16). DISK_ONLY streams serialized blocks
-    // straight off the disk store (no re-inflate path exists there) and
-    // each barrier is read exactly ONCE per stride tower, so the memory
-    // level buys nothing past the threshold.
-    val barrierLevel =
-      if (edgeSpills(s, dir)) org.apache.spark.storage.StorageLevel.DISK_ONLY
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var (ranks, rankIds) = checkpointTracked(
+    // the barrier level was chosen with the edge form (see [[EdgeCp]])
+    var barrier = TransientCache.checkpoint(
       edges.select(col("src").as("node")).distinct()
-        .withColumn("rank", lit(Scale)), barrierLevel)
+        .withColumn("rank", lit(Scale)), ecp.barrierLevel)
+    var ranks = barrier
     var round = 0
     while (round < rounds) {
       // every node has in-edges (bidirected graph), so the inner join +
@@ -289,10 +270,10 @@ object Graph {
           .select(col("node"), col("rank"))
       round += 1
       if (round % CheckpointStride == 0 || round == rounds) {
-        val (next, nextIds) = checkpointTracked(step, barrierLevel)
-        free(rankIds)
+        val next = TransientCache.checkpoint(step, ecp.barrierLevel)
+        TransientCache.unpin(barrier)
+        barrier = next
         ranks = next
-        rankIds = nextIds
       } else {
         // chain this round lazily: plan depth stays ≤ stride towers, so
         // Catalyst's re-optimization cost stays bounded while the number
@@ -300,7 +281,6 @@ object Graph {
         ranks = step
       }
     }
-    graft.TransientCache.adoptRddIds(rankIds)
     ranks
     // release in a finally: a failure mid-loop must not leak the spill
     // table (or its planning conf) into the rest of the session. On
@@ -386,7 +366,7 @@ object Graph {
     // both wedge sides AND the closing-edge probe — checkpoint each once so
     // the projection-graph build (scan → distinct → hot-user window →
     // self-join → agg) runs exactly once, not once per reference
-    val (edges, edgeIds) = checkpointTracked(itemEdges(s, dir))
+    val edges = TransientCache.checkpoint(itemEdges(s, dir))
     // (degree, node) total order — degree breaks hubs, node breaks ties
     val deg = edges.select(col("x").as("n")).unionByName(edges.select(col("y").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -397,8 +377,8 @@ object Graph {
       when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")), col("x")).otherwise(col("y")).as("src"),
       when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")), col("y")).otherwise(col("x")).as("dst"),
       when(struct(col("dx"), col("x")) < struct(col("dy"), col("y")), col("dy")).otherwise(col("dx")).as("dk"))
-    val (oriented, orientedIds) = checkpointTracked(oriented0)
-    free(s, edgeIds)
+    val oriented = TransientCache.checkpoint(oriented0)
+    TransientCache.unpin(edges)
     // wedge (u; v, w) with v before w in the (degree, node) order, closed by
     // the oriented edge v→w — each triangle appears exactly once
     val e1 = oriented.select(col("src").as("u"), col("dst").as("v"), col("dk").as("vk"))
@@ -408,7 +388,6 @@ object Graph {
       .select(col("u"), col("v"), col("w"))
     val closing = oriented.select(col("src").as("v"), col("dst").as("w"))
     val tris = wedges.join(closing, Seq("v", "w"))
-    graft.TransientCache.adoptRddIds(orientedIds)
     tris.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
   }
@@ -431,7 +410,6 @@ object Graph {
     * not a collect — no driver-side data path anywhere.
     */
   def bfsHops(s: SparkSession, dir: String, rounds: Int = BfsRounds): DataFrame = {
-    def free(ids: Set[Int]): Unit = Graph.free(s, ids)
     val base = userItems(s, dir)
     val edges = base.select(col("u").as("src"), col("i").as("dst"))
       .unionByName(base.select(col("i").as("src"), col("u").as("dst")))
@@ -449,24 +427,21 @@ object Graph {
     // `dist` stays a LAZY union of those checkpointed leaves. A union of
     // ≤ rounds materialized leaves is trivial to plan, and the anti-join
     // against it is identical to one against a materialized copy.
-    var (frontier, frontierIds) = checkpointTracked(seed)
+    var frontier = TransientCache.checkpoint(seed)
     var dist = frontier
-    var liveIds = frontierIds
     var round = 1
     while (round <= rounds) {
-      val (next, nextIds) = checkpointTracked(
+      val next = TransientCache.checkpoint(
         frontier.join(edgesCp, frontier("node") === edgesCp("src"))
           .select(edgesCp("dst").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
           .withColumn("hop", lit(round.toLong)))
       dist = dist.unionByName(next)
-      liveIds ++= nextIds
       frontier = next
       round += 1
     }
     // every frontier leaf stays pinned until the session sweep — together
     // they hold exactly one row per reached node (the settled set itself)
-    graft.TransientCache.adoptRddIds(liveIds)
     dist
     // finally so a failure mid-loop cannot leak the spill table or its
     // planning conf; the returned lazy union reads only checkpointed leaves
@@ -489,7 +464,6 @@ object Graph {
     * order-free, so the recursive-CTE replay is exact.
     */
   def ppr(s: SparkSession, dir: String, rounds: Int = Rounds): DataFrame = {
-    def free(ids: Set[Int]): Unit = Graph.free(s, ids)
     // same src co-location as pagerank — the per-round join must reuse the
     // edge arrangement, not rebuild it
     val ecp = edgeCheckpoint(s, dir, edgesWithDeg(s, dir), "src", coLocate = true)
@@ -505,20 +479,17 @@ object Graph {
     // a driver data path), narrows the round shuffle key to `node` alone,
     // and ReuseExchange dedups the identical 1-row broadcast inside each
     // stride tower.
-    val (seedCp, seedIds) = checkpointTracked(
+    val seedCp = TransientCache.checkpoint(
       Tables.events(s, dir).agg(min(col("user_id")).as("seed")))
     val tele = lit(Scale - Scale * DampNum / DampDen)
-    // same |V|-sized barrier discipline as [[pagerank]]: serialized
-    // disk-resident past the spill threshold, hot in memory below it
-    val barrierLevel =
-      if (edgeSpills(s, dir)) org.apache.spark.storage.StorageLevel.DISK_ONLY
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var (ranks, rankIds) = checkpointTracked(
+    // same |V|-sized barrier level as [[pagerank]], chosen with the edges
+    var barrier = TransientCache.checkpoint(
       edges.select(col("src").as("node")).distinct()
         .join(broadcast(seedCp), col("node") === col("seed"), "left")
         .select(col("node"),
           when(col("seed").isNotNull, lit(Scale)).otherwise(lit(0L)).as("rank")),
-      barrierLevel)
+      ecp.barrierLevel)
+    var ranks = barrier
     var round = 0
     while (round < rounds) {
       val step =
@@ -534,18 +505,17 @@ object Graph {
       // same stride policy as [[pagerank]]: bounded lazy tower between
       // materialization barriers
       if (round % CheckpointStride == 0 || round == rounds) {
-        val (next, nextIds) = checkpointTracked(step, barrierLevel)
-        free(rankIds)
+        val next = TransientCache.checkpoint(step, ecp.barrierLevel)
+        TransientCache.unpin(barrier)
+        barrier = next
         ranks = next
-        rankIds = nextIds
       } else {
         ranks = step
       }
     }
     // the final ranks are materialized rows with no lineage back to the
     // seed frame — its single block can go now
-    free(seedIds)
-    graft.TransientCache.adoptRddIds(rankIds)
+    TransientCache.unpin(seedCp)
     ranks.select(col("node"), col("rank"))
     // same finally contract as [[pagerank]]
     } finally ecp.release()

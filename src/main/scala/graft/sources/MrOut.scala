@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -354,7 +356,7 @@ class MrOutWriter(dir: String, partitionId: Int, taskId: Long,
     MrOutCommit(dst.toString)
   }
   override def abort(): Unit = {
-    try out.close() catch { case _: Throwable => () }
+    try out.close() catch { case NonFatal(_) => () }
     fs.delete(tmp, false): Unit
   }
   override def close(): Unit = ()

@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Dedup
+
 /** The per-query hygiene contract of [[Harness.run]]: whatever a query does
   * to the session — mutate conf, register transient caches, throw — the
   * next query starts from the session-start state, so Verify's dump and
@@ -36,6 +38,25 @@ class HarnessSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert((persistedIds -- before).isEmpty,
       "run must drop every block the body registered")
+  }
+
+  test("a loop operator that throws mid-loop leaves no checkpoint behind") {
+    // a STRING doc_id makes the label sum a DOUBLE, so the first
+    // convergence action throws after the edge checkpoint and the first
+    // round's label checkpoint are already pinned
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("harness-leak").toString
+    (0 until 10).map(i => (i.toString, s"doc $i")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val chain = (0 until 9).map(i => (i.toString, (i + 1).toString))
+      .toDF("doc1", "doc2")
+    val before = persistedIds
+    intercept[ClassCastException] {
+      harness.run { q => Dedup.clusters(q, dir, pairs = Some(chain)).count() }
+    }
+    val left = persistedIds -- before
+    assert(left.isEmpty, s"checkpoints left after the sweep: $left")
   }
 
   test("Verify's dump is byte-identical under either query order") {

@@ -62,6 +62,23 @@ class RegistrySpec extends AnyFunSuite {
     assert(memos.isEmpty, s"global memo registry regrown in: $memos")
   }
 
+  test("only TransientCache pins blocks under src/main") {
+    // every operator checkpoint is registered as it is made, so a query that
+    // throws mid-loop leaves nothing the harness's sweep cannot see
+    val sources = mainSources
+    val pinners = sources.collect {
+      case (p, src) if Seq("localCheckpoint(", "getPersistentRDDs")
+          .exists(src.contains) => p.getFileName.toString
+    }
+    assert(pinners == List("TransientCache.scala"),
+      s"blocks must be pinned through TransientCache only, found in: $pinners")
+    val retired = sources.collect {
+      case (p, src) if Seq("adoptRddIds", "checkpointTracked", "checkpointLazyTracked")
+          .exists(src.contains) => p.getFileName.toString
+    }
+    assert(retired.isEmpty, s"late-registration helpers regrown in: $retired")
+  }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graftshim.SessionSweep
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Ann, Dedup, Pipeline}
@@ -39,6 +40,26 @@ class TransientCacheSpec extends AnyFunSuite {
     }
     assert(persistedIds -- strays == Set.empty[Int],
       "releaseAll must drop every operator-registered block")
+  }
+
+  test("checkpoint pins one RDD at its level as it is made; unpin drops exactly it") {
+    harness.run { s =>
+      val before = persistedIds
+      val eager = TransientCache.checkpoint(s.range(100).toDF("id"))
+      val lazyCp = TransientCache.checkpoint(s.range(100).toDF("id"),
+        StorageLevel.MEMORY_AND_DISK_SER, eager = false)
+      val pinned = persistedIds -- before
+      val live = s.sparkContext.getPersistentRDDs
+      assert(pinned.toSeq.map(live(_).getStorageLevel).toSet ==
+        Set(StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK_SER),
+        s"one RDD per checkpoint at its own level, pinned: $pinned")
+      assert(lazyCp.count() == 100)
+      TransientCache.unpin(lazyCp)
+      assert((persistedIds -- before).size == 1)
+      TransientCache.unpin(eager)
+      assert((persistedIds -- before).isEmpty)
+      intercept[IllegalArgumentException](TransientCache.unpin(s.range(1).toDF()))
+    }
   }
 
   test("each shared artifact builds once per query: jobs stay at the sf0.001 ceilings") {

@@ -89,7 +89,10 @@ class BenchSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"round(s) ${missing.toSeq.sorted.mkString(", ")} ran an official bench " +
         "but BENCH_LOCAL_r{N}.json was never committed — cp the full dump " +
-        "(target/bench_local.json from that run) FIRST, before any code change")
+        "(target/bench_local.json from that run) FIRST, before any code change; " +
+        "if that file is gone, the dump is BENCH_r{N}.json's .parsed object " +
+        "re-serialized in Bench's line format (compact JSON, Bench's key order, " +
+        "every number %.3f)")
   }
 
   test("bench dump schema: calib_windows present and sane from r15 on") {

@@ -95,21 +95,18 @@ object MrOut {
     graft.Staging.deleteRecursively(new java.io.File(out))
     graft.Staging.deleteRecursively(new java.io.File(ckpt))
     val staged = Files.createTempDirectory("mrout-stream-staged")
-    Files.copy(Paths.get(s"$dir/documents.parquet"),
-      staged.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val docSchema = Tables.documents(s, dir).schema
-    val q = s.readStream.schema(docSchema).parquet(staged.toString)
-      .select(explode(graft.operators.TextOps.tokens(col("text"))).as("key"),
-        lit("1").as("value"))
-      .writeStream.format("mrout")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Files.deleteIfExists(staged.resolve("documents.parquet"))
-    Files.deleteIfExists(staged)
+    try {
+      Files.copy(Paths.get(s"$dir/documents.parquet"),
+        staged.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      graft.streaming.Streams.runAvailableNow(s,
+        s.readStream.schema(Tables.schema(s, dir, "documents")).parquet(staged.toString)
+          .select(explode(graft.operators.TextOps.tokens(col("text"))).as("key"),
+            lit("1").as("value"))
+          .writeStream.format("mrout")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .outputMode("append"))
+    } finally graft.Staging.deleteRecursively(staged.toFile)
     s.read.format("mrout").load(out)
       .groupBy(col("key").as("word"))
       .agg(count(lit(1)).as("cnt"))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixture tables (TESTDATA.md).
   *
@@ -32,8 +33,8 @@ object Tables {
     * not pile up. One driver-side getFileStatus per lookup — no footer
     * read, no data scan.
     */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
 
   /** Test probe: cache keys naming `path` (one at most, by construction). */
   private[graft] def cachedEntries(path: String): Int = {
@@ -41,7 +42,8 @@ object Tables {
     schemaCache.keySet.asScala.count(_.startsWith(path))
   }
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+  /** The file schema of table `name` under `dir`, from the cache above. */
+  def schema(spark: SparkSession, dir: String, name: String): StructType = {
     val path = s"$dir/$name.parquet"
     val mtime =
       try {
@@ -49,11 +51,13 @@ object Tables {
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getFileStatus(p).getModificationTime
       } catch { case _: java.io.IOException => -1L }
-    val (_, schema) = schemaCache.compute(path, (_, old) =>
+    schemaCache.compute(path, (_, old) =>
       if (old != null && old._1 == mtime) old
-      else (mtime, spark.read.parquet(path).schema))
-    spark.read.schema(schema).parquet(path)
+      else (mtime, spark.read.parquet(path).schema))._2
   }
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

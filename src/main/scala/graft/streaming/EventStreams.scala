@@ -33,17 +33,18 @@ object EventStreams {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Streaming source over a parquet directory of events, normalized to the
-    * same `ts` (µs TimestampType) + `ts_ns` (epoch-nanos long) columns as
-    * the batch loader. The one-time batch schema probe (a driver-side file
-    * footer read, no data scan) picks the fixture generation — streaming
-    * sources require the schema up front, so it can't be inferred lazily.
+  /** Streaming source over `staged`, a directory holding a copy of
+    * `source`'s `events.parquet`, normalized to the same `ts` (µs
+    * TimestampType) + `ts_ns` (epoch-nanos long) columns as the batch
+    * loader. Streaming sources require the schema up front; `ts`'s type
+    * (the fixture generation) comes from `Tables`' cached schema of the
+    * source file, so a fresh staged copy costs no schema-inference job.
     */
-  def readEvents(s: SparkSession, dir: String): DataFrame = {
+  def readEvents(s: SparkSession, staged: String, source: String): DataFrame = {
     import org.apache.spark.sql.types.TimestampType
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = s.read.parquet(dir).schema("ts").dataType
-    val src = s.readStream.schema(eventSchema(tsType)).parquet(dir)
+    val tsType = graft.sources.Tables.schema(s, source, "events")("ts").dataType
+    val src = s.readStream.schema(eventSchema(tsType)).parquet(staged)
     tsType match {
       case LongType =>
         src.withColumnRenamed("ts", "ts_ns")
@@ -372,7 +373,7 @@ object EventStreams {
     runStagedViaFiles(s, dir, "q36_stream_neardup",
         staged => incrementalNearDup(
             s.readStream
-              .schema(graft.sources.Tables.documents(s, dir).schema)
+              .schema(graft.sources.Tables.schema(s, dir, "documents"))
               .parquet(staged))
           .toDF("doc1", "doc2", "jaccard"),
         OutputMode.Append(), file = "documents.parquet")
@@ -639,7 +640,7 @@ object EventStreams {
     val out = runStagedViaFiles(s, dir, "q56_stream_image_phash",
         staged => incrementalImagePhash(
             s.readStream
-              .schema(graft.sources.Tables.documents(s, dir).schema)
+              .schema(graft.sources.Tables.schema(s, dir, "documents"))
               .parquet(staged),
             poisonedBuckets = Some(poisonAcc))
           .toDF("asset1", "asset2", "hamming"),
@@ -670,7 +671,7 @@ object EventStreams {
     // rows, growing with the covered time SPAN (744×|types|/month), never
     // with event count; structurally bounded under corpus growth
     runStagedViaFiles(s, dir, "q25_stream_window",
-      staged => windowedCounts(readEvents(s, staged)),
+      staged => windowedCounts(readEvents(s, staged, dir)),
       boundedState = true)
 
   /** Stage `events.parquet` into a fresh dir (the file streaming source
@@ -750,15 +751,12 @@ object EventStreams {
         s.conf.set(StateProviderConf,
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val stream = build(staged.toString)
-      stream.writeStream
+      Streams.runAvailableNow(s, stream.writeStream
         .outputMode(mode)
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
           val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
           batch.write.mode(writeMode).parquet(outDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+        })
       stream.schema
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
@@ -832,7 +830,7 @@ object EventStreams {
     // state: ENTITY-keyed — one SessionAgg row per user; grows with the
     // user population, so the RocksDB switch governs it past the threshold
     runStagedViaFiles(s, dir, "q33_stream_session",
-        staged => sessionize(readEvents(s, staged)).toDF(),
+        staged => sessionize(readEvents(s, staged, dir)).toDF(),
         OutputMode.Update())
       .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
         col("openSince").as("open_since"))
@@ -934,7 +932,7 @@ object EventStreams {
     // state: ENTITY-keyed — O(1) per (user, event_type) key (the last kept
     // µs), but the key population scales with users
     runStagedViaFiles(s, dir, "q39_stream_debounce",
-      staged => streamingDebounce(readEvents(s, staged),
+      staged => streamingDebounce(readEvents(s, staged, dir),
         graft.operators.Behavior.GateDebounceUs)
         .toDF("user_id", "event_type", "event_id", "ts_us"),
       OutputMode.Append())
@@ -984,7 +982,7 @@ object EventStreams {
   def attributionQuery(s: SparkSession, dir: String): DataFrame =
     // state: ENTITY-keyed — one last-touch register per user
     runStagedViaFiles(s, dir, "q42_stream_attribution",
-      staged => streamingAttribution(readEvents(s, staged))
+      staged => streamingAttribution(readEvents(s, staged, dir))
         .toDF("user_id", "purchase_id", "purchase_us", "click_id", "latency_us"),
       OutputMode.Append())
 
@@ -999,7 +997,7 @@ object EventStreams {
     // state: ENTITY-keyed — per-user covered-day sets (bounded by each
     // user's active span, but user count scales with the corpus)
     runStagedViaFiles(s, dir, "q38_stream_active",
-      staged => streamingRollingActive(readEvents(s, staged)))
+      staged => streamingRollingActive(readEvents(s, staged, dir)))
 
   /** The debounce anchor as a Spark 4 `StatefulProcessor` — the
     * transformWithState twin of [[streamingDebounce]]. Same O(1) state
@@ -1105,7 +1103,7 @@ object EventStreams {
     // of BOTH sides; the largest state of any twin, the RocksDB switch's
     // prime customer (sf1000-probed round 16)
     runStagedViaFiles(s, dir, "q43_stream_join",
-      staged => streamJoin(readEvents(s, staged), readEvents(s, staged)),
+      staged => streamJoin(readEvents(s, staged, dir), readEvents(s, staged, dir)),
       OutputMode.Append())
 
   /** Stream–STATIC join — the enrichment shape: a live event stream joined
@@ -1148,7 +1146,7 @@ object EventStreams {
     // state: NONE — stream×static joins keep no keyed state (the static
     // side is a broadcast); declared bounded so the backend never churns
     runStagedViaFiles(s, dir, "q44_stream_enrich",
-      staged => streamEnrich(readEvents(s, staged), dir),
+      staged => streamEnrich(readEvents(s, staged, dir), dir),
       OutputMode.Append(), boundedState = true)
 
   /** Streaming dedup via Spark's built-in `dropDuplicatesWithinWatermark` —
@@ -1183,7 +1181,7 @@ object EventStreams {
     // inside the watermark horizon; grows with the user population
     // (sf1000-probed round 16)
     runStagedViaFiles(s, dir, "q47_stream_dedup",
-      staged => dedupWithinWatermark(readEvents(s, staged)),
+      staged => dedupWithinWatermark(readEvents(s, staged, dir)),
       OutputMode.Append())
 
   /** Chained streaming aggregations — Spark's multiple-stateful-operator
@@ -1228,7 +1226,7 @@ object EventStreams {
     // grow with the covered span (4+1 windows/hour × |types|), never with
     // event count; structurally bounded under corpus growth
     runStagedViaFiles(s, dir, "q48_stream_rollup",
-      staged => windowRollup(readEvents(s, staged)),
+      staged => windowRollup(readEvents(s, staged, dir)),
       OutputMode.Append(), boundedState = true)
 
   /** q57_stream_drift — the STREAMING twin of `Profile.driftPsi`, the shape
@@ -1272,7 +1270,7 @@ object EventStreams {
       edgeVals.map(e => when(cents > lit(e), 1L).otherwise(0L)).reduce(_ + _)
     // current-window histogram, maintained as streaming keyed state
     val cur = runStagedViaFiles(s, dir, "q57_stream_drift", staged =>
-      readEvents(s, staged)
+      readEvents(s, staged, dir)
         .select(unix_micros(col("ts")).as("ts_us"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
         .filter(col("ts_us") > mid)
@@ -1317,7 +1315,7 @@ object EventStreams {
     // state: ENTITY-keyed — (user × day) windowed counts, the sf1000 OOM
     // that sized the RocksDB switch (~401 M state rows at 12.5 GB staged)
     val daily = runStagedViaFiles(s, dir, "q58_stream_anomaly", staged =>
-      readEvents(s, staged)
+      readEvents(s, staged, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(col("user_id"), window(col("ts"), "1 day").as("w"))
         .agg(count(lit(1)).as("cnt"))
@@ -1344,7 +1342,7 @@ object EventStreams {
   def streamCdcQuery(s: SparkSession, dir: String): DataFrame =
     // state: ENTITY-keyed — one last-write-wins register per CDC key
     runStagedViaFiles(s, dir, "q59_stream_cdc", staged =>
-      graft.operators.Behavior.cdcSnapshot(readEvents(s, staged)))
+      graft.operators.Behavior.cdcSnapshot(readEvents(s, staged, dir)))
 
   /** Number of hash buckets the streaming Misra–Gries sketch shards its
     * counter state over: state is structurally bounded at
@@ -1383,7 +1381,7 @@ object EventStreams {
     val counters = graft.operators.Corpus.MgCounters
     val candidates = runStagedViaFiles(s, dir, "q60_stream_heavy", staged =>
       s.readStream
-        .schema(graft.sources.Tables.documents(s, dir).schema)
+        .schema(graft.sources.Tables.schema(s, dir, "documents"))
         .parquet(staged)
         .select(col("text")).as[String]
         // MAP-SIDE MG COMBINER (round 14 — the sf100 decade probe): the
@@ -1452,13 +1450,8 @@ object EventStreams {
     */
   def runToMemory(s: SparkSession, df: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.runAvailableNow(s,
+      df.writeStream.format("memory").queryName(name).outputMode(mode))
     s.table(name)
   }
 }

@@ -79,6 +79,18 @@ class RegistrySpec extends AnyFunSuite {
     assert(retired.isEmpty, s"late-registration helpers regrown in: $retired")
   }
 
+  test("only Streams starts a stream under src/main") {
+    // a stream started anywhere else runs under a fresh executor classloader
+    // and recompiles its whole plan on every run (Streams' doc)
+    val sources = mainSources
+    val starters = sources.collect {
+      case (p, src) if Seq("writeStream", "DataStreamWriter").exists(src.contains) &&
+          Seq(".start(", ".toTable(").exists(src.contains) => p.getFileName.toString
+    }
+    assert(starters == List("Streams.scala"),
+      s"streams must start through Streams.runAvailableNow only, found in: $starters")
+  }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

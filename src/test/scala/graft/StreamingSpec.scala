@@ -32,11 +32,51 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming windowed counts == batch q15_events_window") {
     val streamed = EventStreams.runToMemory(
       spark,
-      EventStreams.windowedCounts(EventStreams.readEvents(spark, eventsPath)),
+      EventStreams.windowedCounts(EventStreams.readEvents(spark, eventsPath, Sf0001)),
       "win_parity")
     val batch = Relational.q15EventsWindow(spark, Sf0001)
     assert(rowsOf(streamed) == rowsOf(batch))
     assert(rowsOf(streamed).nonEmpty)
+  }
+
+  test("a twin's second run compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // JVM-global counter, one tick per compiled class; suites run one at a
+    // time, so only this test compiles between the two reads
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    EventStreams.windowedCountsQuery(spark, Sf0001).collect()
+    val before = compiled
+    val rows = EventStreams.windowedCountsQuery(spark, Sf0001).collect()
+    val fresh = compiled - before
+    assert(rows.nonEmpty)
+    assert(fresh == 0, s"the second run of q25_stream_window compiled $fresh classes")
+  }
+
+  test("the artifact-isolation conf is restored after a run, a failed build and a failed stream") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import graft.streaming.Streams.IsolationConf
+    def state: Option[String] = spark.conf.getAll.get(IsolationConf)
+    val boom = udf { (l: Long) =>
+      if (l >= 0L) throw new RuntimeException("mid-stream boom"); true
+    }
+    for (prior <- Seq(None, Some("true"))) {
+      prior.fold(spark.conf.unset(IsolationConf))(spark.conf.set(IsolationConf, _))
+      try {
+        EventStreams.windowedCountsQuery(spark, Sf0001).collect()
+        assert(state == prior, "isolation conf changed by a run")
+        intercept[IllegalStateException] {
+          EventStreams.runStagedViaFiles(spark, Sf0001, "iso-build",
+            _ => throw new IllegalStateException("build boom"))
+        }
+        assert(state == prior, "isolation conf changed by a failed build")
+        intercept[Exception] {
+          EventStreams.runStagedViaFiles(spark, Sf0001, "iso-stream", staged =>
+            EventStreams.windowedCounts(EventStreams.readEvents(spark, staged, Sf0001)
+              .filter(boom(col("user_id")))))
+        }
+        assert(state == prior, "isolation conf changed by a failed stream")
+      } finally spark.conf.unset(IsolationConf)
+    }
   }
 
   test("incremental dedup: streaming first-seen set == batch exact dedup") {
@@ -468,7 +508,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.OutputMode
     val streamed = EventStreams.runToMemory(
       spark,
-      EventStreams.streamingRollingActive(EventStreams.readEvents(spark, eventsPath)),
+      EventStreams.streamingRollingActive(EventStreams.readEvents(spark, eventsPath, Sf0001)),
       "rolling_stream", OutputMode.Complete())
       .collect().map(r => r.getAs[java.sql.Date]("day").toString ->
         r.getAs[Long]("n_active_7d")).toMap
@@ -519,7 +559,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.OutputMode
     val streamed = EventStreams.runToMemory(
       spark,
-      EventStreams.streamingDebounce(EventStreams.readEvents(spark, eventsPath),
+      EventStreams.streamingDebounce(EventStreams.readEvents(spark, eventsPath, Sf0001),
         graft.operators.Behavior.GateDebounceUs)
         .toDF("user_id", "event_type", "event_id", "ts_us"),
       "debounce_stream", OutputMode.Append())
@@ -571,7 +611,7 @@ class StreamingSpec extends AnyFunSuite {
           Option(r.getAs[java.lang.Long]("latency_us")).map(_.longValue())))
     val streamed = EventStreams.runToMemory(
       spark,
-      EventStreams.streamingAttribution(EventStreams.readEvents(spark, eventsPath))
+      EventStreams.streamingAttribution(EventStreams.readEvents(spark, eventsPath, Sf0001))
         .toDF("user_id", "purchase_id", "purchase_us", "click_id", "latency_us"),
       "attrib_stream", OutputMode.Append())
       .collect().map(key).toMap
@@ -613,7 +653,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.OutputMode
     val sessions = EventStreams.runToMemory(
       spark,
-      EventStreams.sessionize(EventStreams.readEvents(spark, eventsPath)).toDF(),
+      EventStreams.sessionize(EventStreams.readEvents(spark, eventsPath, Sf0001)).toDF(),
       "sessions", OutputMode.Update())
     // one availableNow batch over one file -> one update per active user
     val perUser = sessions.collect()
@@ -631,8 +671,8 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = EventStreams.runToMemory(
       spark,
       EventStreams.streamJoin(
-        EventStreams.readEvents(spark, eventsPath),
-        EventStreams.readEvents(spark, eventsPath)),
+        EventStreams.readEvents(spark, eventsPath, Sf0001),
+        EventStreams.readEvents(spark, eventsPath, Sf0001)),
       "join_stream", OutputMode.Append())
       .collect().map(r => (r.getAs[Long]("click_id"), r.getAs[Long]("purchase_id"),
         r.getAs[Long]("gap_us"))).toSet
@@ -841,7 +881,7 @@ class StreamingSpec extends AnyFunSuite {
     }.toMap
     val streamed = key(EventStreams.runToMemory(
       spark,
-      EventStreams.streamEnrich(EventStreams.readEvents(spark, eventsPath), Sf0001),
+      EventStreams.streamEnrich(EventStreams.readEvents(spark, eventsPath, Sf0001), Sf0001),
       "enrich_stream", OutputMode.Append()))
     val cust = graft.sources.Tables.customer(spark, Sf0001)
     val nat = graft.sources.Tables.nation(spark, Sf0001)

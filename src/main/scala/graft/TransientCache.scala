@@ -64,7 +64,8 @@ object TransientCache {
   }
 
   /** Drop the blocks of a frame [[checkpoint]] returned, ahead of the sweep:
-    * a loop round its successor has superseded. The id stays registered;
+    * a loop round its successor has superseded, or a sink's input once its
+    * write has returned. The id stays registered;
     * [[releaseAll]] skips ids that are no longer persisted.
     */
   def unpin(df: DataFrame): Unit = df.queryExecution.logical match {

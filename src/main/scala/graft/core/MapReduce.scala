@@ -116,12 +116,22 @@ object MapReduceJob {
     * text write — files concatenate to the totally-ordered output without any
     * driver-side collect (the 100 TB path; replaces the reference's external
     * `sort mr-out*`, `src/main/test-mr.sh:59`).
+    *
+    * The range partitioner samples its input with a job of its own, which
+    * would recompute `ds` — re-read the reduce shuffle and run every
+    * `reducef` a second time. A lazy checkpoint in front of the `orderBy`
+    * lets the sampling job materialize the reduce output (one row per key,
+    * what the range exchange writes anyway) and the exchange read those
+    * blocks. They are unpinned as soon as the write returns or throws, so
+    * the sink leaves nothing pinned behind it.
     */
   def writeSortedText(ds: Dataset[KeyValue], path: String): Unit = {
     import ds.sparkSession.implicits._
-    ds.orderBy("key", "value")
+    val reduced = graft.TransientCache.checkpoint(ds.toDF, eager = false)
+    try reduced.as[KeyValue].orderBy("key", "value")
       .map(kv => s"${kv.key} ${kv.value}")
       .write.mode("overwrite").text(path)
+    finally graft.TransientCache.unpin(reduced)
   }
 
   /** Write the `mr-out` text sink (one file tree, atomic via Spark's output

@@ -16,20 +16,21 @@ object Workloads {
     * `strings.FieldsFunc(contents, c => !unicode.IsLetter(c))`
     * (reference `src/mrapps/wc.go:21-39`). Implemented by code-point walk so
     * supplementary-plane letters behave like Go's rune-based split (a plain
-    * `String.split` regex would also work for BMP text but this pins parity).
+    * `String.split` regex would also work for BMP text but this pins parity);
+    * each token is one `substring` of the letter run.
     */
   def letterTokens(contents: String): Seq[String] = {
     val out = Seq.newBuilder[String]
-    val sb = new StringBuilder
+    var start = -1 // first char of the current letter run, -1 outside one
     var i = 0
     val n = contents.length
     while (i < n) {
       val cp = contents.codePointAt(i)
-      if (Character.isLetter(cp)) sb.appendAll(Character.toChars(cp))
-      else if (sb.nonEmpty) { out += sb.result(); sb.clear() }
+      if (Character.isLetter(cp)) { if (start < 0) start = i }
+      else if (start >= 0) { out += contents.substring(start, i); start = -1 }
       i += Character.charCount(cp)
     }
-    if (sb.nonEmpty) out += sb.result()
+    if (start >= 0) out += contents.substring(start, n)
     out.result()
   }
 

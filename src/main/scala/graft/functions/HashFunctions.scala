@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftshim.{ArrayDotExpr, BpeTokenCountExpr, Fnv64Expr, GraftColumnShim, SortedOverlapExpr, WsSplitExpr, WsTokenCountExpr}
+import org.apache.spark.sql.graftshim.{ArrayDotExpr, BpeTokenCountExpr, Fnv64Expr, GraftColumnShim, LetterSplitExpr, SortedOverlapExpr, WsSplitExpr, WsTokenCountExpr}
 
 /** Deterministic 64-bit string hashing as a first-class engine extension:
   * a native Catalyst `Expression` with whole-stage-codegen support
@@ -76,6 +76,12 @@ object GraftFunctions {
     */
   def wsSplit(c: Column): Column =
     GraftColumnShim.column(WsSplitExpr(GraftColumnShim.expression(c)))
+
+  /** Codegen'd letter-run tokenizer, `filter(split(text, "[^\\p{L}]+"),
+    * t => t =!= "")` in one byte scan (the wc/indexer tokenization).
+    */
+  def letterSplit(c: Column): Column =
+    GraftColumnShim.column(LetterSplitExpr(GraftColumnShim.expression(c)))
 
   private val fnv64Builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.size == 1, "fnv64 expects exactly one argument")

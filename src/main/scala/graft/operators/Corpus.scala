@@ -183,7 +183,7 @@ object Corpus {
     val q = terms.distinct
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        explode(filter(split(col("text"), "[^\\p{L}]+"), t => t =!= "")).as("term"))
+        explode(TextOps.tokens(col("text"))).as("term"))
       .filter(col("term").isin(q: _*))
       .groupBy("doc_id")
       .agg(count_distinct(col("term")).as("n_terms"), count(lit(1)).as("score"))
@@ -254,7 +254,7 @@ object Corpus {
     val perDoc = graft.TransientCache.cache(
       Tables.documents(s, dir)
         .select(col("doc_id"),
-          filter(split(col("text"), "[^\\p{L}]+"), t => t =!= "").as("toks"))
+          TextOps.tokens(col("text")).as("toks"))
         .select(col("doc_id") +: size(col("toks")).cast("long").as("dl") +:
           tfCols: _*))
     // docs whose text tokenizes to nothing never entered the old dl table

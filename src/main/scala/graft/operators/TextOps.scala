@@ -19,12 +19,14 @@ import graft.sources.Tables
   */
 object TextOps {
 
-  /** Tokenizer shared by wc/indexer: split on non-letter runs, exactly the
-    * reference's `FieldsFunc(!unicode.IsLetter)` (`src/mrapps/wc.go:21-39`).
-    * `\p{L}` matches Go's letter table for the BMP text in play.
+  /** Tokenizer shared by wc/indexer/tfidf/search and the MrOut round trips:
+    * the maximal letter runs, exactly the reference's
+    * `FieldsFunc(!unicode.IsLetter)` (`src/mrapps/wc.go:21-39`) and the
+    * `filter(split(text, "[^\\p{L}]+"), t => t =!= "")` the oracles replay,
+    * as one codegen'd byte scan ([[graft.functions.TextKernels.letterSplit]]).
     */
   private[graft] def tokens(c: org.apache.spark.sql.Column) =
-    filter(split(c, "[^\\p{L}]+"), t => t =!= "")
+    graft.functions.GraftFunctions.letterSplit(c)
 
   /** wc_udaf — the SAME word count routed through the `functions.udaf`
     * REGISTRY tier: `Workloads.WcAggregator` (the typed
@@ -370,9 +372,10 @@ object TextOps {
     * the accuracy test in the suite uses real multilingual snippets.
     */
   def textLangId(s: SparkSession, dir: String): DataFrame = {
-    // \p{L} includes Han ideographs (general category Lo), so the zh markers
-    // tokenize correctly without a script class.
-    val toks = split(lower(col("text")), "[^\\p{L}]+")
+    // letters include Han ideographs (general category Lo), so the zh
+    // markers tokenize correctly without a script class; no marker is empty,
+    // so dropping the empty split tokens changes no score
+    val toks = tokens(lower(col("text")))
     val scored = langMarkers.toSeq.sortBy(_._1).map { case (lang, markers) =>
       struct(
         size(filter(toks, t => t.isin(markers: _*))).as("score"),

@@ -77,3 +77,27 @@ case class WsSplitExpr(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): WsSplitExpr =
     copy(child = newChild)
 }
+
+/** `letter_split(string) -> array<string>` — codegen'd byte-scan equivalent
+  * of `filter(split(text, "[^\\p{L}]+"), t => t =!= "")`, the reference's
+  * letter-run tokenizer (`src/mrapps/wc.go:21-39`). Replaces a regex split
+  * plus an INTERPRETED higher-order filter (ArrayFilter is
+  * CodegenFallback) with one UTF-8 scan; kernel at
+  * [[graft.functions.TextKernels.letterSplit]], pinned against the regex
+  * form by TextKernelSpec.
+  */
+case class LetterSplitExpr(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "letter_split"
+
+  override protected def nullSafeEval(input: Any): Any =
+    graft.functions.TextKernels.letterSplit(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.letterSplit($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): LetterSplitExpr =
+    copy(child = newChild)
+}

@@ -6,6 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{KeyValue, MapReduceJob, Workloads}
 
+/** JVM-global count of `reducef` calls. Local-mode tasks run in this JVM,
+  * and a closure reaches an object's field without serializing a copy of it.
+  */
+object ReduceCalls {
+  val n = new java.util.concurrent.atomic.AtomicInteger()
+}
+
 /** Core MapReduceJob mechanics: line-split vs whole-file equivalence for
   * line-local mapfs, and the distributed sorted text sink.
   */
@@ -30,10 +37,49 @@ class MapReduceSpec extends AnyFunSuite {
       KeyValue("a", "0"), KeyValue("z", "9")))
     val out = Files.createTempDirectory("mr-sink").toString + "/out"
     MapReduceJob.writeSortedText(ds, out)
-    val files = new java.io.File(out).listFiles()
+    assert(readSink(out) == Seq("a 0", "a 1", "b 2", "c 3", "z 9"))
+  }
+
+  private def readSink(out: String): Seq[String] =
+    new java.io.File(out).listFiles()
       .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val lines = files.flatMap(f => scala.io.Source.fromFile(f).getLines().toSeq).toSeq
-    assert(lines == Seq("a 0", "a 1", "b 2", "c 3", "z 9"))
+      .flatMap(f => scala.io.Source.fromFile(f).getLines().toSeq).toSeq
+
+  /** A reduce over 5 keys whose `reducef` counts its calls and throws on
+    * `failOn`.
+    */
+  private def countedReduce(failOn: String = "") = {
+    val s = spark
+    import s.implicits._
+    val job = new MapReduceJob((_, _) => Nil, (k, values) => {
+      ReduceCalls.n.incrementAndGet()
+      if (k == failOn) throw new IllegalStateException(s"reducef failed on $k")
+      values.size.toString
+    })
+    job.reduce(s, s.createDataset(Seq("b", "a", "c", "a", "z", "d", "a")
+      .map(k => KeyValue(k, "1"))))
+  }
+
+  test("writeSortedText runs reducef once per key") {
+    val ds = countedReduce()
+    val out = Files.createTempDirectory("mr-sink-once").toString + "/out"
+    ReduceCalls.n.set(0)
+    MapReduceJob.writeSortedText(ds, out)
+    assert(ReduceCalls.n.get == 5, "the range partitioner's sampling job re-ran the reduce")
+    assert(readSink(out) == Seq("a 3", "b 1", "c 1", "d 1", "z 1"))
+  }
+
+  test("writeSortedText leaves no persistent RDD behind, after a write and a failed one") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    MapReduceJob.writeSortedText(countedReduce(),
+      Files.createTempDirectory("mr-sink-pins").toString + "/out")
+    assert(sc.getPersistentRDDs.keySet == before)
+    intercept[Exception] {
+      MapReduceJob.writeSortedText(countedReduce(failOn = "c"),
+        Files.createTempDirectory("mr-sink-fail").toString + "/out")
+    }
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("reduce sees the complete multiset of values per key") {

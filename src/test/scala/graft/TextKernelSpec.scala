@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{GraftFunctions, TextKernels}
 
-/** The byte-scan token-count kernels (`bpe_token_count` / `ws_token_count`):
+/** The byte-scan tokenizing kernels (`bpe_token_count`, `ws_token_count`,
+  * `ws_split`, `letter_split`):
   * exact equivalence to the Java-regex formulations they replace (the DuckDB
   * oracles replay those regexes, so equivalence is the correctness contract),
   * codegen parity over a real scan, SQL registration, plan shape.
@@ -78,6 +79,76 @@ class TextKernelSpec extends AnyFunSuite {
       assert(kernelSplit(s) == splitRef(s),
         s"split mismatch on ${s.map(c => f"\\u${c.toInt}%04x").mkString}")
     }
+  }
+
+  private def letterSplit(u: UTF8String): Seq[String] = {
+    val a = TextKernels.letterSplit(u)
+    (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
+  }
+
+  test("letterSplit == non-empty [^\\p{L}]+ split on generated and edge strings") {
+    // UTF8String.fromString encodes a lone surrogate half as '?', a
+    // non-letter, exactly where the regex sees a non-letter code point
+    for (s <- TokenizerSpec.samples ++ edgeCases) {
+      assert(letterSplit(UTF8String.fromString(s)) == TokenizerSpec.regexTokens(s),
+        s"letter split mismatch on ${s.map(c => f"\\u${c.toInt}%04x").mkString}")
+    }
+  }
+
+  test("letterSplit treats malformed UTF-8 as non-letters, like its decoded string") {
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val a = 'a'.toInt
+    val cases = Seq(
+      bytes(0xC1, 0xA1),                  // overlong 2-byte form of 'a'
+      bytes(a, 0xC1, 0xA1, a),
+      bytes(0xE0, 0x81, 0xA1),            // overlong 3-byte form of 'a'
+      bytes(a, 0xE0, 0x81, 0xA1, a),
+      bytes(0xED, 0xA0, 0x80),            // UTF-8-encoded surrogate U+D800
+      bytes(a, 0xED, 0xA0, 0x80, a),
+      bytes(a, 0xE4, 0xB8),               // truncated lead byte at the end
+      bytes(a, 0xE4, 0xB8, a),            // truncated lead byte before a letter
+      bytes(a, 0xF0, 0x9D, 0x90, a),      // truncated 4-byte sequence
+      bytes(a, 0xA1, a),                  // lone continuation byte
+      bytes(0xC3, 0xA9, 0xA9, 0xC3, 0xA9), // é, stray continuation, é
+      bytes(0xF4, 0x90, 0x80, 0x80),      // past U+10FFFF
+      bytes(0xF0, 0x9D, 0x90, 0x80),      // U+1D400, a supplementary letter
+      bytes())
+    for (b <- cases) {
+      val u = UTF8String.fromBytes(b)
+      assert(letterSplit(u) == TokenizerSpec.regexTokens(u.toString),
+        s"mismatch on bytes ${b.map(x => f"${x & 0xFF}%02X").mkString(" ")}")
+    }
+    assert(letterSplit(UTF8String.fromBytes(bytes())) == Nil)
+    assert(letterSplit(UTF8String.fromBytes(bytes(a, 0xA1, a))) == Seq("a", "a"))
+  }
+
+  test("letter_split column == filter(split, non-empty) column over a real scan") {
+    import org.apache.spark.sql.functions.{col, filter, split}
+    val rows = graft.sources.Tables.documents(spark, Sf0001)
+      .select(
+        filter(split(col("text"), "[^\\p{L}]+"), t => t =!= "").as("regex"),
+        GraftFunctions.letterSplit(col("text")).as("kernel"))
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getSeq[String](0) == r.getSeq[String](1))
+    }
+  }
+
+  test("wc plan: letter_split kernel, no regex split or interpreted filter") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, StringSplit}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graftshim.LetterSplitExpr
+    val df = graft.operators.TextOps.wc(spark, Sf0001)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    // every operator of the AQE-final plan, query stages included
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(plan) { case p => p }
+    def has(f: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
+      nodes.exists(_.expressions.exists(_.exists(f)))
+    assert(has(_.isInstanceOf[LetterSplitExpr]), s"letter_split missing:\n$plan")
+    assert(!has(e => e.isInstanceOf[ArrayFilter] || e.isInstanceOf[StringSplit]),
+      s"regex split or HOF filter survived:\n$plan")
   }
 
   test("ws_split column == split(trim, \\s+) column over a real scan") {

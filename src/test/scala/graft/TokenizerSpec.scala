@@ -13,9 +13,9 @@ import graft.core.Workloads
   * (Raw ScalaCheck Gen sampling — the scalatestplus bridge isn't in the
   * offline dependency cache.)
   */
-class TokenizerSpec extends AnyFunSuite {
-
-  private def regexTokens(s: String): Seq[String] =
+object TokenizerSpec {
+  /** The `[^\p{L}]+` split both letter tokenizers must reproduce. */
+  def regexTokens(s: String): Seq[String] =
     s.split("[^\\p{L}]+").toSeq.filter(_.nonEmpty)
 
   private val interesting = Gen.oneOf(
@@ -26,10 +26,18 @@ class TokenizerSpec extends AnyFunSuite {
     cs <- Gen.listOfN(n, interesting)
   } yield cs.mkString
 
+  /** 500 seeded strings mixing BMP and supplementary letters, separators
+    * and lone surrogate halves.
+    */
+  lazy val samples: Seq[String] = Gen.listOfN(500, strGen)
+    .apply(Gen.Parameters.default, Seed(42L))
+    .getOrElse(throw new IllegalStateException("generator produced no sample"))
+}
+
+class TokenizerSpec extends AnyFunSuite {
+  import TokenizerSpec.{regexTokens, samples}
+
   test("letterTokens == regex [^\\p{L}]+ split on 500 generated strings") {
-    val samples = Gen.listOfN(500, strGen)
-      .apply(Gen.Parameters.default, Seed(42L))
-      .getOrElse(fail("generator produced no sample"))
     samples.foreach { s =>
       assert(Workloads.letterTokens(s) == regexTokens(s), s"input: ${s.take(80)}")
     }

@@ -44,11 +44,11 @@ class TextKernelSpec extends AnyFunSuite {
   private def splitRef(s: String): Seq[String] =
     graft.operators.TextOps.wsTokens(s).toSeq
 
-  private def kernelSplit(s: String): Seq[String] = {
-    val a = TextKernels.wsSplit(UTF8String.fromString(s))
-    (0 until a.numElements()).map(i =>
-      a.getUTF8String(i).toString)
-  }
+  private def strings(a: org.apache.spark.sql.catalyst.util.ArrayData): Seq[String] =
+    (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
+
+  private def kernelSplit(s: String): Seq[String] =
+    strings(TextKernels.wsSplit(UTF8String.fromString(s)))
 
   test("kernels == regex references on edge cases") {
     for (s <- edgeCases) {
@@ -81,10 +81,8 @@ class TextKernelSpec extends AnyFunSuite {
     }
   }
 
-  private def letterSplit(u: UTF8String): Seq[String] = {
-    val a = TextKernels.letterSplit(u)
-    (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
-  }
+  private def letterSplit(u: UTF8String): Seq[String] =
+    strings(TextKernels.letterSplit(u))
 
   test("letterSplit == non-empty [^\\p{L}]+ split on generated and edge strings") {
     // UTF8String.fromString encodes a lone surrogate half as '?', a

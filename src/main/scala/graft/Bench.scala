@@ -95,8 +95,9 @@ object Bench {
       // quiet queries pay for a single timed run, so total bench wall time
       // stays near the single-run cost.
       // Harness.run sweeps outside the timed window, on the failure path
-      // too: caches and checkpoints (releaseAll, so no run free-rides on
-      // the previous run's blocks), session conf, streaming state
+      // too: caches, checkpoints and staged dirs (releaseAll, so no run
+      // free-rides on the previous run's blocks), session conf, streaming
+      // state
       def runOnce(): Double = harness.run { s =>
         val t0 = System.nanoTime()
         fn(s, sfDir).write.mode("overwrite").format("noop").save()

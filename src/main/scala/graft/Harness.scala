@@ -16,8 +16,9 @@ import org.apache.spark.sql.graftshim.SessionSweep
   * [[run]] executes one query and, in a `finally`, applies the per-query
   * hygiene contract:
   *   1. [[TransientCache.releaseAll]] — drop the query's operator-internal
-  *      caches and checkpoints, so no run free-rides on a previous run's
-  *      blocks and storage cannot accumulate over a 194-query session;
+  *      caches and checkpoints and delete its staged directories, so no run
+  *      free-rides on a previous run's blocks and neither storage nor scratch
+  *      disk can accumulate over a 194-query session;
   *   2. restore the session conf to the construction snapshot (e.g. the
   *      streaming reader's nanosAsLong flag), so no query perturbs another's
   *      environment;

@@ -1024,8 +1024,7 @@ object Ann {
     */
   def ivfPqPersistedTopK(s: SparkSession, dir: String, nQueries: Int = 8,
       k: Int = 10, nProbe: Int = 4): DataFrame = {
-    val indexDir = graft.Staging.dir(s,
-      s"ann-index/${graft.Staging.datasetLeaf(dir)}")
+    val indexDir = graft.TransientCache.stageDir(s, "ann-index")
     persistIvfPqIndex(s, dir, indexDir)
     val (cents, books) = readCodebooks(s, indexDir)
     val encoded = s.read.parquet(s"$indexDir/codes")

@@ -83,8 +83,7 @@ object Dedup {
     * round-trips parquet losslessly (it IS parquet).
     */
   def incremental(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = graft.Staging.dir(s,
-      s"digest-store/${graft.Staging.datasetLeaf(dir)}")
+    val storeDir = graft.TransientCache.stageDir(s, "digest-store")
     persistDigestStore(s, dir, storeDir)
     val docs = Tables.documents(s, dir)
     val batch = docs.filter(col("doc_id") % 3 === 0)
@@ -153,8 +152,7 @@ object Dedup {
     * a compacting rewrite to stay canonical.
     */
   def incremental2(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = graft.Staging.dir(s,
-      s"digest-store-2crawl/${graft.Staging.datasetLeaf(dir)}")
+    val storeDir = graft.TransientCache.stageDir(s, "digest-store-2crawl")
     persistDigestStore(s, dir, storeDir)
     val docs = Tables.documents(s, dir)
     def fpOf(df: DataFrame): DataFrame =

@@ -38,24 +38,31 @@ object Compaction {
     */
   val CompactTarget = 4
 
-  private def base(s: SparkSession, dir: String, leaf: String): String =
-    graft.Staging.dir(s,
-      s"compact/${new java.io.File(dir).getName}/$leaf")
-
   /** Stage the documents table as [[SmallFiles]] small parquet files, then
     * compact them into [[CompactTarget]] files. Returns (smallDir,
-    * compactedDir); both are fixed per sf-dir and overwritten per run.
+    * compactedDir): two fresh [[graft.TransientCache.stageDir]]s that the
+    * query's sweep deletes, so read them before it.
     */
   def compactDocuments(s: SparkSession, dir: String): (String, String) = {
-    val small = base(s, dir, "small")
-    val compacted = base(s, dir, "compacted")
+    val (small, compacted, _) = compact(s, dir)(_ => CompactTarget)
+    (small, compacted)
+  }
+
+  /** Stage, then rewrite into `count(smallDir)` files: the shared body of
+    * both compaction modes.
+    */
+  private def compact(s: SparkSession, dir: String)(
+      count: String => Int): (String, String, Int) = {
+    val small = graft.TransientCache.stageDir(s, "compact-small")
+    val compacted = graft.TransientCache.stageDir(s, "compact-compacted")
     Tables.documents(s, dir)
       .repartition(SmallFiles, col("doc_id"))
       .write.mode("overwrite").parquet(small)
+    val n = count(small)
     s.read.parquet(small)
-      .repartition(CompactTarget)
+      .repartition(n)
       .write.mode("overwrite").parquet(compacted)
-    (small, compacted)
+    (small, compacted, n)
   }
 
   /** Byte-sized target for [[compactDocumentsBySize]] — the PRODUCTION
@@ -86,19 +93,9 @@ object Compaction {
     * derived count) so the spec can assert the derivation independently.
     */
   def compactDocumentsBySize(s: SparkSession, dir: String,
-      targetBytes: Long = TargetBytesPerFile): (String, String, Int) = {
-    val small = base(s, dir, "small-bysize")
-    val compacted = base(s, dir, "compacted-bysize")
-    Tables.documents(s, dir)
-      .repartition(SmallFiles, col("doc_id"))
-      .write.mode("overwrite").parquet(small)
-    val inputBytes = dataFiles(small).map(_.length).sum
-    val n = sizeDerivedFileCount(inputBytes, targetBytes)
-    s.read.parquet(small)
-      .repartition(n)
-      .write.mode("overwrite").parquet(compacted)
-    (small, compacted, n)
-  }
+      targetBytes: Long = TargetBytesPerFile): (String, String, Int) =
+    compact(s, dir)(small =>
+      sizeDerivedFileCount(dataFiles(small).map(_.length).sum, targetBytes))
 
   /** compact_docs — the registered content-invariance gate: the per-group
     * fingerprint of the COMPACTED files (the oracle computes it from the
@@ -151,8 +148,7 @@ object Compaction {
     require(!maxRow.isNullAt(0), s"empty documents table at $dir")
     val maxId = maxRow.getLong(0)
     val w = maxId / buckets + 1
-    val lake = graft.Staging.dir(s,
-      s"skipstats/${new java.io.File(dir).getName}/lake")
+    val lake = graft.TransientCache.stageDir(s, "skipstats-lake")
     docs.withColumn("bucket", expr(s"doc_id DIV $w"))
       .write.mode("overwrite").partitionBy("bucket").parquet(lake)
     val (lo, hi) = (2 * w, 5 * w - 1)

@@ -25,24 +25,17 @@ import org.apache.spark.sql.functions._
   */
 object Jsonl {
 
-  /** Session-scoped staging dir per (sf-dir, prefix), overwritten each
-    * invocation so repeated runs (bench warm-up + timed, Verify) don't
-    * accumulate copies; the [[graft.Staging]] appId scope keeps concurrent
-    * sessions off each other's copies.
-    */
-  private def stageDir(s: org.apache.spark.sql.SparkSession, dir: String,
-      prefix: String): String =
-    graft.Staging.dir(s, s"jsonl/$prefix-${new java.io.File(dir).getName}")
-
   /** Round-trip the documents table through gzip JSON-lines: write the
-    * parquet fixture out as a JSONL export, read it back with the explicit
-    * schema, and return the read-back frame. The write is the sink half,
-    * the read the source half; both run on executors (rows never pass
+    * parquet fixture out as a JSONL export into a fresh
+    * [[graft.TransientCache.stageDir]] (deleted by the query's sweep, so the
+    * returned frame must be consumed before it), read it back with the
+    * explicit schema, and return the read-back frame. The write is the sink
+    * half, the read the source half; both run on executors (rows never pass
     * through the driver).
     */
   def documentsViaJsonl(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val out = stageDir(s, dir, "documents")
+    val out = graft.TransientCache.stageDir(s, "jsonl-documents")
     docs.write.mode("overwrite").option("compression", "gzip").json(out)
     s.read.schema(docs.schema).json(out)
   }

@@ -65,7 +65,7 @@ object MrOut {
     * all reading and writing; the driver only lists the directory.
     */
   def wcRoundtrip(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val out = graft.Staging.dir(s, s"mrout/wc-${new java.io.File(dir).getName}")
+    val out = graft.TransientCache.stageDir(s, "mrout-wc")
     graft.operators.TextOps.wc(s, dir)
       .selectExpr("word AS key", "CAST(cnt AS STRING) AS value")
       .write.format("mrout").mode("overwrite").save(out)
@@ -76,37 +76,26 @@ object MrOut {
   /** mrout_stream_roundtrip — the STREAMING-sink gate: per-document
     * (word, "1") pairs — the reference's exact wc wire tuples, stateless so
     * Append mode applies — streamed through the connector's DSv2
-    * STREAMING_WRITE path (one AvailableNow pass over the staged corpus,
-    * epoch-named atomic files), read back through the batch SOURCE, and
-    * reduced to word counts. The oracle is the same wc SQL over the
+    * STREAMING_WRITE path (one AvailableNow pass over the corpus file
+    * where it is, epoch-named atomic files into a fresh
+    * [[graft.TransientCache.stageDir]]), read back through the batch SOURCE,
+    * and reduced to word counts. The oracle is the same wc SQL over the
     * original parquet, so the full streaming write ⇒ batch read loop must
     * be lossless: a dropped epoch file, a double-committed task, or any
     * line-format infidelity flips the hash.
     */
   def wcStreamRoundtrip(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions._
-    val name = new java.io.File(dir).getName
-    val out = graft.Staging.dir(s, s"mrout/wc-stream-$name")
-    val ckpt = graft.Staging.dir(s, s"mrout/wc-stream-ckpt-$name")
-    // the staged input dir is fresh per run, so the checkpoint (which pins
-    // the source path) and the sink dir must reset with it
-    graft.Staging.deleteRecursively(new java.io.File(out))
-    graft.Staging.deleteRecursively(new java.io.File(ckpt))
-    val staged = Files.createTempDirectory("mrout-stream-staged")
-    try {
-      Files.copy(Paths.get(s"$dir/documents.parquet"),
-        staged.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
-      graft.streaming.Streams.runAvailableNow(s,
-        s.readStream.schema(Tables.schema(s, dir, "documents")).parquet(staged.toString)
-          .select(explode(graft.operators.TextOps.tokens(col("text"))).as("key"),
-            lit("1").as("value"))
-          .writeStream.format("mrout")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append"))
-    } finally graft.Staging.deleteRecursively(staged.toFile)
+    val out = graft.TransientCache.stageDir(s, "mrout-wc-stream")
+    graft.streaming.Streams.runAvailableNow(s,
+      s.readStream.schema(Tables.schema(s, dir, "documents"))
+        .parquet(graft.streaming.Streams.oneFile(dir, "documents.parquet"))
+        .select(explode(graft.operators.TextOps.tokens(col("text"))).as("key"),
+          lit("1").as("value"))
+        .writeStream.format("mrout")
+        .option("path", out)
+        .outputMode("append"))
     s.read.format("mrout").load(out)
       .groupBy(col("key").as("word"))
       .agg(count(lit(1)).as("cnt"))

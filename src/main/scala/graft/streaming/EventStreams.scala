@@ -33,18 +33,18 @@ object EventStreams {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Streaming source over `staged`, a directory holding a copy of
-    * `source`'s `events.parquet`, normalized to the same `ts` (µs
-    * TimestampType) + `ts_ns` (epoch-nanos long) columns as the batch
-    * loader. Streaming sources require the schema up front; `ts`'s type
-    * (the fixture generation) comes from `Tables`' cached schema of the
-    * source file, so a fresh staged copy costs no schema-inference job.
+  /** Streaming source over `path` (`source`'s `events.parquet`, or a copy
+    * of it), normalized to the same `ts` (µs TimestampType) + `ts_ns`
+    * (epoch-nanos long) columns as the batch loader. Streaming sources
+    * require the schema up front; `ts`'s type (the fixture generation)
+    * comes from `Tables`' cached schema of the source file, so the stream
+    * costs no schema-inference job.
     */
-  def readEvents(s: SparkSession, staged: String, source: String): DataFrame = {
+  def readEvents(s: SparkSession, path: String, source: String): DataFrame = {
     import org.apache.spark.sql.types.TimestampType
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = graft.sources.Tables.schema(s, source, "events")("ts").dataType
-    val src = s.readStream.schema(eventSchema(tsType)).parquet(staged)
+    val src = s.readStream.schema(eventSchema(tsType)).parquet(path)
     tsType match {
       case LongType =>
         src.withColumnRenamed("ts", "ts_ns")
@@ -360,7 +360,7 @@ object EventStreams {
   }
 
   /** q36_stream_neardup — the REGISTERED streaming near-dup query: one
-    * AvailableNow pass of [[incrementalNearDup]] over the staged documents
+    * AvailableNow pass of [[incrementalNearDup]] over the documents
     * table, pair-set deduped across bands. Oracled since round 8 with the
     * same DuckDB banding replay as batch dedup_minhash: a bounded pass uses
     * the same shingles, band keys and exact-Jaccard verify, so the
@@ -371,10 +371,10 @@ object EventStreams {
     // state: ENTITY-keyed — per-bucket signature lists grow with distinct
     // corpus content; RocksDB switch governs it past the threshold
     runStagedViaFiles(s, dir, "q36_stream_neardup",
-        staged => incrementalNearDup(
+        input => incrementalNearDup(
             s.readStream
               .schema(graft.sources.Tables.schema(s, dir, "documents"))
-              .parquet(staged))
+              .parquet(input))
           .toDF("doc1", "doc2", "jaccard"),
         OutputMode.Append(), file = "documents.parquet")
       .distinct()
@@ -490,7 +490,7 @@ object EventStreams {
   }
 
   /** q50_stream_embed_neardup — the REGISTERED streaming embedding
-    * near-dup query: one bounded AvailableNow pass over the staged
+    * near-dup query: one bounded AvailableNow pass over the
     * embeddings table, nbits derived from the static count (== the batch
     * operator's adaptive sizing, so the bucket structure is identical),
     * pairs deduped across tables and rounded by Spark's own `round` —
@@ -511,8 +511,8 @@ object EventStreams {
     // state: ENTITY-keyed — per-hyperplane-bucket vector lists grow with
     // the corpus; RocksDB switch governs it past the threshold
     val out = runStagedViaFiles(s, dir, "q50_stream_embed_neardup",
-        staged => incrementalEmbedNearDup(
-            s.readStream.schema(emb.schema).parquet(staged), nbits = nbits,
+        input => incrementalEmbedNearDup(
+            s.readStream.schema(emb.schema).parquet(input), nbits = nbits,
             poisonedBuckets = Some(poisonAcc))
           .toDF("id1", "id2", "cos"),
         OutputMode.Append(), file = "embeddings.parquet")
@@ -625,7 +625,7 @@ object EventStreams {
 
   /** q56_stream_image_phash — the REGISTERED streaming image near-dup
     * query: one bounded AvailableNow pass of [[incrementalImagePhash]]
-    * over the staged documents table, pairs deduped across bands — the
+    * over the documents table, pairs deduped across bands — the
     * SAME DuckDB replay that oracles batch mm_image_phash verifies the
     * streaming path's values. Oracle equality holds only while no bucket
     * exceeds the cap (Append emissions can't be retracted — the q50
@@ -638,10 +638,10 @@ object EventStreams {
     // state: ENTITY-keyed — per-hamming-bucket signature lists grow with
     // the asset corpus; RocksDB switch governs it past the threshold
     val out = runStagedViaFiles(s, dir, "q56_stream_image_phash",
-        staged => incrementalImagePhash(
+        input => incrementalImagePhash(
             s.readStream
               .schema(graft.sources.Tables.schema(s, dir, "documents"))
-              .parquet(staged),
+              .parquet(input),
             poisonedBuckets = Some(poisonAcc))
           .toDF("asset1", "asset2", "hamming"),
         OutputMode.Append(), file = "documents.parquet")
@@ -655,31 +655,27 @@ object EventStreams {
     out
   }
 
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.Staging.deleteRecursively(f)
-
-  /** q25_stream_window — the REGISTERED streaming query: stages the fixture
-    * `events.parquet` into a directory (the file streaming source lists
-    * directories), runs [[windowedCounts]] through one AvailableNow pass
-    * into a memory sink, and returns the sink table. Output columns match
-    * `Relational.q15EventsWindow` exactly, so the DuckDB batch oracle
-    * verifies the STREAMING path end-to-end (one bounded pass ⇒ no
-    * watermark drops ⇒ streaming answer == batch answer).
+  /** q25_stream_window — the REGISTERED streaming query: runs
+    * [[windowedCounts]] over the fixture `events.parquet` through one
+    * AvailableNow pass ([[runStagedViaFiles]]) and returns the result.
+    * Output columns match `Relational.q15EventsWindow` exactly, so the
+    * DuckDB batch oracle verifies the STREAMING path end-to-end (one
+    * bounded pass ⇒ no watermark drops ⇒ streaming answer == batch answer).
     */
   def windowedCountsQuery(s: SparkSession, dir: String): DataFrame =
     // state: TIME-keyed, not entity-keyed — (1-hour window × event_type)
     // rows, growing with the covered time SPAN (744×|types|/month), never
     // with event count; structurally bounded under corpus growth
     runStagedViaFiles(s, dir, "q25_stream_window",
-      staged => windowedCounts(readEvents(s, staged, dir)),
+      input => windowedCounts(readEvents(s, input, dir)),
       boundedState = true)
 
-  /** Stage `events.parquet` into a fresh dir (the file streaming source
-    * lists directories; exactly ONE file ⇒ exactly one AvailableNow batch),
-    * run the stream into a PARQUET result directory via `foreachBatch`
-    * (executors write the sink files — result rows NEVER pass through the
-    * driver, unlike a memory sink), and return a lazy read of the result
-    * with the stream's own schema.
+  /** Stream `$dir/$file` where it is (through [[Streams.oneFile]]: exactly
+    * ONE file ⇒ exactly one AvailableNow batch), run the stream into a
+    * PARQUET result directory via `foreachBatch` (executors write the sink
+    * files — result rows NEVER pass through the driver, unlike a memory
+    * sink), and return a lazy read of the result with the stream's own
+    * schema.
     *
     * `foreachBatch` rather than the parquet file sink because the file sink
     * is Append-only: Append would withhold every window still inside the
@@ -687,18 +683,17 @@ object EventStreams {
     * supports Complete/Update, and the bounded one-batch pass makes each
     * mode's emission equal the batch answer.
     *
-    * The result dir is FIXED per prefix and overwritten on each invocation,
-    * so repeated runs (bench warm-up + timed, RegistrySpec) don't accumulate
-    * /tmp copies; the staged source copy is deleted eagerly. Consumers use
-    * the returned frame before the next invocation of the same query — the
-    * registered-query contract (one action per invocation).
+    * The result dir is a fresh [[graft.TransientCache.stageDir]] labelled
+    * with `prefix`, like the stream's checkpoint ([[Streams]]): the query's
+    * sweep deletes both, after success or failure, so the returned frame
+    * must be consumed before it — the registered-query contract (one
+    * action per invocation).
     */
   private[graft] def runStagedViaFiles(s: SparkSession, dir: String, prefix: String,
       build: String => DataFrame,
       mode: OutputMode = OutputMode.Complete(),
       file: String = "events.parquet",
       boundedState: Boolean = false): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     // Write-mode contract per OutputMode (r13 advice — Append joined the
     // accepted set with q60 and its terms must be explicit, not inferred):
     //   Complete — each batch carries the full result: overwrite.
@@ -716,28 +711,24 @@ object EventStreams {
       s"runStagedViaFiles: unsupported OutputMode $mode — the foreachBatch " +
         "sink defines semantics only for Complete/Update/Append (see the " +
         "write-mode contract above)")
-    val outDir = graft.Staging.dir(s, s"stream-out/$prefix")
+    val input = Streams.oneFile(dir, file)
+    val outDir = graft.TransientCache.stageDir(s, s"stream-out-$prefix")
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val prevProvider = s.conf.getOption(StateProviderConf)
-    // Every setup step after the staging dir exists (the copy, the conf
-    // switches, the threshold parse) runs inside the try, so a failure in
-    // any of them still restores the conf and deletes the staged copy; a
-    // failed createTempDirectory has created and changed nothing.
-    val staged = Files.createTempDirectory(s"$prefix-staged")
+    // Every setup step after the conf snapshot (the conf switches, the
+    // threshold parse) runs inside the try, so a failure in any of them
+    // still restores the conf.
     val schema = try {
-      Files.copy(Paths.get(s"$dir/$file"),
-        staged.resolve(file), StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursively(new java.io.File(outDir))
-      val stagedBytes = Files.size(staged.resolve(file))
+      val inputBytes = java.nio.file.Files.size(java.nio.file.Paths.get(dir, file))
       // State partitions: see [[stateParts]]. The conf is captured at
       // stream START (cloned session), so restoring it afterwards is safe.
-      s.conf.set("spark.sql.shuffle.partitions", stateParts(stagedBytes).toString)
+      s.conf.set("spark.sql.shuffle.partitions", stateParts(inputBytes).toString)
       // State BACKEND selection, declared + sized (round 15 — the sf1000
       // probe): the default HDFSBackedStateStore is an in-heap map, and an
       // AvailableNow pass holds a query's ENTIRE keyed state in one batch
       // (no intra-batch watermark eviction), so per-entity state must fit in
       // memory — q58's (user, day) counts measured ~401 M state rows at the
-      // 12.5 GB staged input and OOM'd the 24 g heap in StateStore.put.
+      // 12.5 GB input and OOM'd the 24 g heap in StateStore.put.
       // ENTITY-KEYED streams therefore switch to the RocksDB provider past
       // [[RocksDbStagedBytes]]: disk-backed state with an in-memory working
       // set — exactly what a production cluster configures for entity-keyed
@@ -747,10 +738,10 @@ object EventStreams {
       // 10-row histogram state with RocksDB's per-batch commit overhead:
       // 28.2 → 150.1 s at sf1000, measured). Captured at stream START like
       // the partition count, restored in the finally.
-      if (!boundedState && stagedBytes > rocksDbThreshold(s))
+      if (!boundedState && inputBytes > rocksDbThreshold(s))
         s.conf.set(StateProviderConf,
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val stream = build(staged.toString)
+      val stream = build(input)
       Streams.runAvailableNow(s, stream.writeStream
         .outputMode(mode)
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -768,7 +759,6 @@ object EventStreams {
           if (s.conf.getOption(StateProviderConf).isDefined)
             s.conf.unset(StateProviderConf)
       }
-      deleteRecursively(staged.toFile)
     }
     // foreachBatch wrote exactly the stream's schema, so read it back with
     // that schema instead of paying a footer-inference job (the file source
@@ -776,7 +766,7 @@ object EventStreams {
     s.read.schema(schema).parquet(outDir)
   }
 
-  /** State partitions for a staged input of `stagedBytes`: one per 64 MiB,
+  /** State partitions for an input of `inputBytes`: one per 64 MiB,
     * capped at 32 — the bytes-per-task sizing any shuffle gets, decided
     * from the data like the broadcast threshold. AQE does not resize state
     * stores, so the count is fixed at stream start.
@@ -793,13 +783,13 @@ object EventStreams {
     * slower on 4 cores) — an open item, not a reason for a core-count
     * floor.
     */
-  private[graft] def stateParts(stagedBytes: Long): Int =
-    math.min(32L, stagedBytes / (64L << 20) + 1L).toInt
+  private[graft] def stateParts(inputBytes: Long): Int =
+    math.min(32L, inputBytes / (64L << 20) + 1L).toInt
 
   private[graft] val StateProviderConf =
     "spark.sql.streaming.stateStore.providerClass"
 
-  /** Staged-input size past which [[runStagedViaFiles]] switches the state
+  /** Input size past which [[runStagedViaFiles]] switches the state
     * backend to RocksDB: sized between the sf100 events file (1.57 GB —
     * the in-heap store measured fine there, round 14) and the sf1000 file
     * (12.5 GB — q58's per-entity state OOM'd in-heap, round 15).
@@ -818,7 +808,7 @@ object EventStreams {
       .getOrElse(RocksDbStagedBytes)
 
   /** q33_stream_session — the REGISTERED mapGroupsWithState query: one
-    * bounded Update-mode pass of [[sessionize]] over the staged events.
+    * bounded Update-mode pass of [[sessionize]] over the events.
     * A single AvailableNow batch yields one state update per user, so the
     * per-user aggregates equal the batch answer and the DuckDB oracle
     * verifies the custom-state operator end-to-end. Output keeps only the
@@ -830,7 +820,7 @@ object EventStreams {
     // state: ENTITY-keyed — one SessionAgg row per user; grows with the
     // user population, so the RocksDB switch governs it past the threshold
     runStagedViaFiles(s, dir, "q33_stream_session",
-        staged => sessionize(readEvents(s, staged, dir)).toDF(),
+        input => sessionize(readEvents(s, input, dir)).toDF(),
         OutputMode.Update())
       .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
         col("openSince").as("open_since"))
@@ -932,7 +922,7 @@ object EventStreams {
     // state: ENTITY-keyed — O(1) per (user, event_type) key (the last kept
     // µs), but the key population scales with users
     runStagedViaFiles(s, dir, "q39_stream_debounce",
-      staged => streamingDebounce(readEvents(s, staged, dir),
+      input => streamingDebounce(readEvents(s, input, dir),
         graft.operators.Behavior.GateDebounceUs)
         .toDF("user_id", "event_type", "event_id", "ts_us"),
       OutputMode.Append())
@@ -982,13 +972,13 @@ object EventStreams {
   def attributionQuery(s: SparkSession, dir: String): DataFrame =
     // state: ENTITY-keyed — one last-touch register per user
     runStagedViaFiles(s, dir, "q42_stream_attribution",
-      staged => streamingAttribution(readEvents(s, staged, dir))
+      input => streamingAttribution(readEvents(s, input, dir))
         .toDF("user_id", "purchase_id", "purchase_us", "click_id", "latency_us"),
       OutputMode.Append())
 
   /** q38_stream_active — the REGISTERED streaming rolling-actives query:
     * one Complete-mode AvailableNow pass of [[streamingRollingActive]] over
-    * the staged events. A bounded pass emits every covered (user, day)
+    * the events. A bounded pass emits every covered (user, day)
     * exactly once, so the day counts equal the batch answer and the SAME
     * DuckDB oracle as rolling_active verifies the two-stateful-operator
     * chain end-to-end.
@@ -997,7 +987,7 @@ object EventStreams {
     // state: ENTITY-keyed — per-user covered-day sets (bounded by each
     // user's active span, but user count scales with the corpus)
     runStagedViaFiles(s, dir, "q38_stream_active",
-      staged => streamingRollingActive(readEvents(s, staged, dir)))
+      input => streamingRollingActive(readEvents(s, input, dir)))
 
   /** The debounce anchor as a Spark 4 `StatefulProcessor` — the
     * transformWithState twin of [[streamingDebounce]]. Same O(1) state
@@ -1093,7 +1083,7 @@ object EventStreams {
   }
 
   /** q43_stream_join — the REGISTERED stream–stream join: one Append-mode
-    * AvailableNow pass with the staged events read as two separate file
+    * AvailableNow pass with the events read as two separate file
     * streams. A bounded pass sees both sides in full before the watermark
     * advances, so the inner-join output equals the batch interval join and
     * the DuckDB batch oracle gates the symmetric-state path end-to-end.
@@ -1103,7 +1093,7 @@ object EventStreams {
     // of BOTH sides; the largest state of any twin, the RocksDB switch's
     // prime customer (sf1000-probed round 16)
     runStagedViaFiles(s, dir, "q43_stream_join",
-      staged => streamJoin(readEvents(s, staged, dir), readEvents(s, staged, dir)),
+      input => streamJoin(readEvents(s, input, dir), readEvents(s, input, dir)),
       OutputMode.Append())
 
   /** Stream–STATIC join — the enrichment shape: a live event stream joined
@@ -1136,7 +1126,7 @@ object EventStreams {
   }
 
   /** q44_stream_enrich — the REGISTERED stream-static enrichment: one
-    * Append-mode AvailableNow pass joining the staged event stream to the
+    * Append-mode AvailableNow pass joining the event stream to the
     * batch customer + nation dims. Stateless, so the streamed rows are the
     * batch join's rows exactly and the DuckDB three-table join oracles the
     * path end-to-end (every fixture user_id resolves to a customer, so the
@@ -1146,7 +1136,7 @@ object EventStreams {
     // state: NONE — stream×static joins keep no keyed state (the static
     // side is a broadcast); declared bounded so the backend never churns
     runStagedViaFiles(s, dir, "q44_stream_enrich",
-      staged => streamEnrich(readEvents(s, staged, dir), dir),
+      input => streamEnrich(readEvents(s, input, dir), dir),
       OutputMode.Append(), boundedState = true)
 
   /** Streaming dedup via Spark's built-in `dropDuplicatesWithinWatermark` —
@@ -1181,7 +1171,7 @@ object EventStreams {
     // inside the watermark horizon; grows with the user population
     // (sf1000-probed round 16)
     runStagedViaFiles(s, dir, "q47_stream_dedup",
-      staged => dedupWithinWatermark(readEvents(s, staged, dir)),
+      input => dedupWithinWatermark(readEvents(s, input, dir)),
       OutputMode.Append())
 
   /** Chained streaming aggregations — Spark's multiple-stateful-operator
@@ -1226,7 +1216,7 @@ object EventStreams {
     // grow with the covered span (4+1 windows/hour × |types|), never with
     // event count; structurally bounded under corpus growth
     runStagedViaFiles(s, dir, "q48_stream_rollup",
-      staged => windowRollup(readEvents(s, staged, dir)),
+      input => windowRollup(readEvents(s, input, dir)),
       OutputMode.Append(), boundedState = true)
 
   /** q57_stream_drift — the STREAMING twin of `Profile.driftPsi`, the shape
@@ -1245,7 +1235,7 @@ object EventStreams {
     * constant-size batch tail over the maintained histogram — exactly what
     * a monitoring dashboard reads between triggers.
     *
-    * Parity contract: one AvailableNow pass over the staged second half ⇒
+    * Parity contract: one AvailableNow pass over the second half ⇒
     * the streamed histogram equals the batch current-half histogram, so the
     * final table equals `drift_psi` row-for-row and the SAME DuckDB oracle
     * verifies the streaming path end-to-end (the q25/q56 full-replay
@@ -1269,8 +1259,8 @@ object EventStreams {
     def binOf(cents: org.apache.spark.sql.Column) =
       edgeVals.map(e => when(cents > lit(e), 1L).otherwise(0L)).reduce(_ + _)
     // current-window histogram, maintained as streaming keyed state
-    val cur = runStagedViaFiles(s, dir, "q57_stream_drift", staged =>
-      readEvents(s, staged, dir)
+    val cur = runStagedViaFiles(s, dir, "q57_stream_drift", input =>
+      readEvents(s, input, dir)
         .select(unix_micros(col("ts")).as("ts_us"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
         .filter(col("ts_us") > mid)
@@ -1313,9 +1303,9 @@ object EventStreams {
     */
   def streamAnomalyQuery(s: SparkSession, dir: String): DataFrame = {
     // state: ENTITY-keyed — (user × day) windowed counts, the sf1000 OOM
-    // that sized the RocksDB switch (~401 M state rows at 12.5 GB staged)
-    val daily = runStagedViaFiles(s, dir, "q58_stream_anomaly", staged =>
-      readEvents(s, staged, dir)
+    // that sized the RocksDB switch (~401 M state rows at 12.5 GB input)
+    val daily = runStagedViaFiles(s, dir, "q58_stream_anomaly", input =>
+      readEvents(s, input, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(col("user_id"), window(col("ts"), "1 day").as("w"))
         .agg(count(lit(1)).as("cnt"))
@@ -1333,7 +1323,7 @@ object EventStreams {
     * operator pins in PlanShapeSpec. The delete filter rides after the
     * aggregate, on |keys| rows per trigger.
     *
-    * Parity contract: one AvailableNow pass folds the whole staged log
+    * Parity contract: one AvailableNow pass folds the whole log
     * into the same per-key maxima as the batch groupBy (struct max is
     * order-free), so the final snapshot equals `cdc_apply` row-for-row and
     * the SAME DuckDB oracle verifies the streaming path end-to-end (the
@@ -1341,8 +1331,8 @@ object EventStreams {
     */
   def streamCdcQuery(s: SparkSession, dir: String): DataFrame =
     // state: ENTITY-keyed — one last-write-wins register per CDC key
-    runStagedViaFiles(s, dir, "q59_stream_cdc", staged =>
-      graft.operators.Behavior.cdcSnapshot(readEvents(s, staged, dir)))
+    runStagedViaFiles(s, dir, "q59_stream_cdc", input =>
+      graft.operators.Behavior.cdcSnapshot(readEvents(s, input, dir)))
 
   /** Number of hash buckets the streaming Misra–Gries sketch shards its
     * counter state over: state is structurally bounded at
@@ -1379,10 +1369,10 @@ object EventStreams {
   def streamHeavyQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val counters = graft.operators.Corpus.MgCounters
-    val candidates = runStagedViaFiles(s, dir, "q60_stream_heavy", staged =>
+    val candidates = runStagedViaFiles(s, dir, "q60_stream_heavy", input =>
       s.readStream
         .schema(graft.sources.Tables.schema(s, dir, "documents"))
-        .parquet(staged)
+        .parquet(input)
         .select(col("text")).as[String]
         // MAP-SIDE MG COMBINER (round 14 — the sf100 decade probe): the
         // first shape shuffled EVERY raw token into the 32 bucket groups

@@ -20,16 +20,30 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * nothing by sharing the default state. The clone copies the conf at
   * `start()`, so the previous value — set or unset — is restored as soon
   * as the stream has run, failed or not.
+  *
+  * Every stream checkpoints into a [[graft.TransientCache.stageDir]], so
+  * the query's sweep deletes it whether the stream finished or threw.
+  * Without a location Spark makes a `temporary-*` dir of its own and
+  * deletes it at stop only when the query did not fail.
   */
 object Streams {
 
   private[graft] val IsolationConf = "spark.sql.artifact.isolation.enabled"
 
+  /** The path a file stream source reads `dir/file` through where it is: a
+    * one-file glob. Given the plain file path, the source takes it as the
+    * partition base path, which must be a directory; a glob sets none. One
+    * file ⇒ one AvailableNow batch, and the source only reads it.
+    */
+  private[graft] def oneFile(dir: String, file: String): String = s"$dir/{$file}"
+
   /** Start `writer` as one AvailableNow pass and wait for it to end. */
   def runAvailableNow(s: SparkSession, writer: DataStreamWriter[_]): Unit = {
+    val ckpt = graft.TransientCache.stageDir(s, "stream-ckpt")
     val prev = s.conf.getAll.get(IsolationConf)
     s.conf.set(IsolationConf, "false")
-    try writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    try writer.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
     finally prev match {
       case Some(v) => s.conf.set(IsolationConf, v)
       case None => s.conf.unset(IsolationConf)

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.util.Utils
 
 /** Post-streaming session hygiene for long-lived multi-query sessions.
   *
@@ -58,4 +60,15 @@ object SessionSweep {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Spark's own scratch-dir pair (`private[spark]` surface), for
+    * `graft.TransientCache.stageDir` and its sweep: a fresh
+    * `<prefix>-<uuid>` dir under one of the application's local dirs,
+    * registered for deletion at JVM exit, and the recursive delete that also
+    * unregisters it.
+    */
+  def createTempDir(sc: SparkContext, prefix: String): java.io.File =
+    Utils.createTempDir(Utils.getLocalDir(sc.conf), prefix)
+
+  def deleteRecursively(dir: java.io.File): Unit = Utils.deleteRecursively(dir)
 }

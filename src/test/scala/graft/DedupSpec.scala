@@ -118,12 +118,19 @@ class DedupSpec extends AnyFunSuite {
     assert(kept1.nonEmpty, "batch 1 kept nothing — fixture drifted")
     assert(crossCrawlDups.nonEmpty,
       "no batch-2 replica of a batch-1 kept doc classified dup_of_store")
-    // retried append is a no-op: the store is dedup-on-write
-    val storeDir = graft.Staging.dir(spark,
-      s"digest-store-2crawl/${graft.Staging.datasetLeaf(Sf0001)}")
-    val before = spark.read.parquet(storeDir).count()
+    // the store lifecycle on a store of the spec's own: the union-back
+    // takes the historical store to the replay's store1, and a retried
+    // append is a no-op because the store is dedup-on-write
+    val storeDir = Files.createTempDirectory("dedup-union-back").toString
+    Dedup.persistDigestStore(spark, Sf0001, storeDir)
     val s2 = spark
     import s2.implicits._
+    def stored: Set[String] =
+      spark.read.parquet(storeDir).as[String].collect().toSet
+    assert(stored === store0)
+    Dedup.unionBackKept(spark, storeDir, kept1.map(_._2).toSeq.toDF("fp"))
+    assert(stored === store1, "union-back did not add batch 1's kept digests")
+    val before = spark.read.parquet(storeDir).count()
     Dedup.unionBackKept(spark, storeDir,
       kept1.map(_._2).toSeq.toDF("fp"))
     val after = spark.read.parquet(storeDir).count()

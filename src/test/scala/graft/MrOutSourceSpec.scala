@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2Relation}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{MrOut, MrOutScan}
@@ -91,17 +91,20 @@ class MrOutSourceSpec extends AnyFunSuite {
 
   test("streaming write: epoch-named atomic files, batch read composes, totals exact") {
     val s = spark
-    val rt = graft.sources.MrOut.wcStreamRoundtrip(s, TestSpark.Sf0001).collect()
+    val rtDf = graft.sources.MrOut.wcStreamRoundtrip(s, TestSpark.Sf0001)
+    val rt = rtDf.collect()
       .map(r => r.getAs[String]("word") -> r.getAs[Long]("cnt")).toMap
     val batch = graft.operators.TextOps.wc(s, TestSpark.Sf0001).collect()
       .map(r => r.getAs[String]("word") -> r.getAs[Long]("cnt")).toMap
     assert(rt === batch, "streaming-write roundtrip diverged from batch wc")
     // sink dir mechanics: only epoch-named committed files, no temp
-    // leftovers. The sink lives under the session-scoped staging root
-    // (graft.Staging since e7dc1f7) — derive it through the same function
-    // the roundtrip used, not a hardcoded tmpdir path.
-    val out = graft.Staging.dir(s,
-      s"mrout/wc-stream-${new java.io.File(TestSpark.Sf0001).getName}")
+    // leftovers. The sink is the roundtrip's own staged dir; its read-back
+    // frame names it as the path of its mrout relation.
+    val out = rtDf.queryExecution.analyzed.collectFirst {
+      case r: DataSourceV2Relation => r.options.get("path")
+    }.getOrElse(fail("no mrout relation in the roundtrip's plan"))
+    assert(new java.io.File(out).getName.startsWith("graft-mrout-wc-stream-"),
+      s"sink is not a staged dir: $out")
     val files = new java.io.File(out).listFiles().map(_.getName)
       .filterNot(_.startsWith(".")).sorted
     assert(files.nonEmpty && files.forall(_.matches("mr-out-e\\d{5}-\\d{5}")),

@@ -79,6 +79,25 @@ class RegistrySpec extends AnyFunSuite {
     assert(retired.isEmpty, s"late-registration helpers regrown in: $retired")
   }
 
+  test("only TransientCache makes or deletes staged dirs under src/main") {
+    // a dir made or deleted anywhere else escapes the per-query sweep.
+    // SessionSweep forwards Spark's private temp-dir pair to TransientCache;
+    // the session's warehouse dir is the one session-wide exception
+    val scope = Set("TransientCache.scala", "SessionSweep.scala")
+    val banned = Seq("createTempDir", "deleteRecursively", "Files.copy",
+      "SparkListenerApplicationEnd", "object Staging")
+    val sources = mainSources
+    val outside = for {
+      (p, src) <- sources if !scope(p.getFileName.toString)
+      k <- banned
+      n = java.util.regex.Pattern.quote(k).r.findAllMatchIn(src).size if n > 0
+    } yield (p.getFileName.toString, k, n)
+    assert(outside == List(("Harness.scala", "createTempDir", 1)),
+      s"staged dirs must be made through TransientCache.stageDir only: $outside")
+    assert(sources.exists { case (p, src) => p.getFileName.toString == "Harness.scala" &&
+      src.contains("createTempDirectory(\"graft-warehouse\")") })
+  }
+
   test("only Streams starts a stream under src/main") {
     // a stream started anywhere else runs under a fresh executor classloader
     // and recompiles its whole plan on every run (Streams' doc)

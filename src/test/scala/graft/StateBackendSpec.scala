@@ -27,10 +27,11 @@ import graft.streaming.EventStreams
   *   (d) the state-partition count comes from the staged bytes alone (one
   *       store for a KB-scale fixture) and is restored the same way;
   *   (e) a failure in the setup steps (here a non-numeric threshold)
-  *       restores the conf and leaves no staged copy behind;
+  *       restores the conf and leaves no staged copy behind (the input is
+  *       streamed in place, so none is made);
   *   (f) the result is read back with the stream's own schema, and the
-  *       staged copy is read with the source file's cached schema: the run
-  *       costs its one batch job and no inference job.
+  *       input is read with the source file's cached schema: the run costs
+  *       its one batch job and no inference job.
   *
   * The threshold is driven through its session-conf override
   * (`RocksDbStagedBytesConf`) so a KB-scale fixture exercises both sides of

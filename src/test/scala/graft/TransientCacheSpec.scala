@@ -62,6 +62,27 @@ class TransientCacheSpec extends AnyFunSuite {
     }
   }
 
+  test("a caller's cache first filled inside an eager checkpoint survives the sweep") {
+    TransientCache.releaseAll(spark)
+    val before = persistedIds
+    // a plain cache the caller never hands over, first built by the
+    // checkpoint's own job
+    val user = spark.range(1000).toDF("id").cache()
+    try {
+      val cp = TransientCache.checkpoint(user.selectExpr("id * 2 AS x"))
+      val cpId = cp.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+        case p => fail(s"checkpoint returned ${p.nodeName}")
+      }
+      val filled = persistedIds -- before
+      assert(filled.size == 2 && filled(cpId),
+        s"expected the caller's cache and the checkpoint, got $filled")
+      TransientCache.releaseAll(spark)
+      assert(persistedIds -- before == filled - cpId,
+        "the sweep must drop the checkpoint and keep the caller's cache")
+    } finally user.unpersist(true)
+  }
+
   test("each shared artifact builds once per query: jobs stay at the sf0.001 ceilings") {
     // Spark jobs per query (construction + noop write, second pass) at
     // sf0.001, as counted when these artifacts were shared through a

@@ -1,11 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.SessionSweep
+
+import graft.functions.GraftExtensions
 
 /** The one way to build a session and run a query: every main (Bench,
   * Verify, PlanDump, the Probe* measurement mains) and the test session go
@@ -69,7 +69,12 @@ object Harness {
 
   /** The session every entry point shares: `local[cores]` (with
     * `maxFailures` task attempts when above 1), one shuffle partition per
-    * core, UTC, no UI, WARN logging and a private temp warehouse dir.
+    * core, UTC, no UI, WARN logging, and [[GraftExtensions]] (graft's SQL
+    * functions, the array-dot rewrite and the as-of join strategy) from its
+    * first query on. Its warehouse is a private `graft-warehouse-*` dir
+    * under `java.io.tmpdir`, deleted at JVM exit. `getOrCreate` returns a
+    * live active or default session unchanged, so a caller that needs a
+    * fresh one clears both first (as the test session `TestSpark` does).
     */
   def session(cores: Int = cpus, maxFailures: Int = 1): SparkSession = {
     val master =
@@ -80,7 +85,8 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
+        SessionSweep.exitScopedDir("graft-warehouse").toString)
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

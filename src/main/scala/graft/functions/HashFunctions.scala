@@ -1,17 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftshim.{ArrayDotExpr, BpeTokenCountExpr, Fnv64Expr, GraftColumnShim, LetterSplitExpr, SortedOverlapExpr, WsSplitExpr, WsTokenCountExpr}
+import org.apache.spark.sql.graftshim.{ArrayDotExpr, ArrayDotRewrite, AsOfJoinStrategy, BpeTokenCountExpr, Fnv64Expr, GraftColumnShim, LetterSplitExpr, SortedOverlapExpr, WsSplitExpr, WsTokenCountExpr}
 
 /** Deterministic 64-bit string hashing as a first-class engine extension:
   * a native Catalyst `Expression` with whole-stage-codegen support
   * ([[org.apache.spark.sql.graftshim.Fnv64Expr]] — the preferred
   * extensibility tier over Scala UDFs: no ser/de boundary, stays inside the
-  * generated loop), registered either per-session
-  * ([[GraftFunctions.register]]) or globally via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * generated loop), callable from SQL in every session that
+  * [[GraftExtensions]] built.
   */
 object HashFunctions {
   /** 64-bit FNV-1a over UTF-16 code units. Public + statically forwarded so
@@ -82,102 +81,49 @@ object GraftFunctions {
     */
   def letterSplit(c: Column): Column =
     GraftColumnShim.column(LetterSplitExpr(GraftColumnShim.expression(c)))
+}
 
-  private val fnv64Builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.size == 1, "fnv64 expects exactly one argument")
-    Fnv64Expr(exprs.head)
-  }
-  private val dotBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.size == 2, "array_dot expects exactly two arguments")
-    ArrayDotExpr(exprs(0), exprs(1))
-  }
-  private val overlapBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.size == 2, "sorted_overlap expects exactly two arguments")
-    SortedOverlapExpr(exprs(0), exprs(1))
-  }
-
-  /** Register both functions into an existing session's registry so
-    * `spark.sql("SELECT fnv64(x), array_dot(a, b) ...")` works, plus the
-    * [[org.apache.spark.sql.graftshim.ArrayDotRewrite]] optimizer rule
-    * (HOF dot-product idiom → native kernel) for this session.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv64", fnv64Builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_overlap", overlapBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_token_count",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 1, "bpe_token_count expects exactly one argument")
-        BpeTokenCountExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_token_count",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 1, "ws_token_count expects exactly one argument")
-        WsTokenCountExpr(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_split",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 1, "ws_split expects exactly one argument")
-        WsSplitExpr(exprs.head)
-      }, "built-in")
-    if (!spark.experimental.extraOptimizations.contains(
-        org.apache.spark.sql.graftshim.ArrayDotRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          org.apache.spark.sql.graftshim.ArrayDotRewrite
-    // the native as-of join planner strategy (tier c of the extension
-    // ladder: expression -> rule -> strategy)
-    if (!spark.experimental.extraStrategies.contains(
-        org.apache.spark.sql.graftshim.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+
-          org.apache.spark.sql.graftshim.AsOfJoinStrategy
+/** graft's session extensions: the six SQL functions of [[GraftExtensions.functions]],
+  * the [[org.apache.spark.sql.graftshim.ArrayDotRewrite]] optimizer rule
+  * (HOF dot-product idiom -> native kernel) and the
+  * [[org.apache.spark.sql.graftshim.AsOfJoinStrategy]] planner strategy
+  * (tier c of the extension ladder: expression -> rule -> strategy).
+  * [[graft.Harness.session]] builds every session with them; outside graft
+  * they load through `spark.sql.extensions=graft.functions.GraftExtensions`.
+  */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build _))
+    }
+    ext.injectOptimizerRule(_ => ArrayDotRewrite)
+    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }
 
-/** For `spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("fnv64"),
-      new ExpressionInfo(classOf[Fnv64Expr].getName, "fnv64"),
-      { exprs: Seq[Expression] => Fnv64Expr(exprs.head) }))
-    ext.injectFunction((
-      FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDotExpr].getName, "array_dot"),
-      { exprs: Seq[Expression] => ArrayDotExpr(exprs(0), exprs(1)) }))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_overlap"),
-      new ExpressionInfo(classOf[SortedOverlapExpr].getName, "sorted_overlap"),
-      { exprs: Seq[Expression] => SortedOverlapExpr(exprs(0), exprs(1)) }))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCountExpr].getName, "bpe_token_count"),
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 1, "bpe_token_count expects exactly one argument")
-        BpeTokenCountExpr(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("ws_token_count"),
-      new ExpressionInfo(classOf[WsTokenCountExpr].getName, "ws_token_count"),
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 1, "ws_token_count expects exactly one argument")
-        WsTokenCountExpr(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("ws_split"),
-      new ExpressionInfo(classOf[WsSplitExpr].getName, "ws_split"),
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 1, "ws_split expects exactly one argument")
-        WsSplitExpr(exprs.head)
-      }))
-    ext.injectOptimizerRule(_ => org.apache.spark.sql.graftshim.ArrayDotRewrite)
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftshim.AsOfJoinStrategy)
+object GraftExtensions {
+  /** One SQL function: its name, the expression class `DESCRIBE FUNCTION`
+    * reports, and a builder over exactly `arity` arguments.
+    */
+  final class SqlFunction(val name: String, val cls: Class[_ <: Expression], arity: Int,
+      make: Seq[Expression] => Expression) {
+    def build(args: Seq[Expression]): Expression = {
+      require(args.size == arity,
+        s"$name expects $arity argument(s), got ${args.size}")
+      make(args)
+    }
   }
+
+  /** Every graft SQL function, declared once. */
+  val functions: Seq[SqlFunction] = Seq(
+    new SqlFunction("fnv64", classOf[Fnv64Expr], 1, a => Fnv64Expr(a(0))),
+    new SqlFunction("array_dot", classOf[ArrayDotExpr], 2, a => ArrayDotExpr(a(0), a(1))),
+    new SqlFunction("sorted_overlap", classOf[SortedOverlapExpr], 2,
+      a => SortedOverlapExpr(a(0), a(1))),
+    new SqlFunction("bpe_token_count", classOf[BpeTokenCountExpr], 1,
+      a => BpeTokenCountExpr(a(0))),
+    new SqlFunction("ws_token_count", classOf[WsTokenCountExpr], 1,
+      a => WsTokenCountExpr(a(0))),
+    new SqlFunction("ws_split", classOf[WsSplitExpr], 1, a => WsSplitExpr(a(0))))
 }

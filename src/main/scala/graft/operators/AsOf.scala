@@ -22,7 +22,6 @@ object AsOf {
     * pre-renamed (r_k, r_t) since the exec emits both schemas.
     */
   def q35AsofNative(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // idempotent: strategy + funcs
     val ord = Tables.orders(s, dir)
       .groupBy("o_custkey", "o_orderdate")
       .agg(max("o_orderkey").as("o_orderkey"))

@@ -53,9 +53,9 @@ case class AsOfJoinNode(
   * size fits `spark.sql.autoBroadcastJoinThreshold` plans as
   * [[BroadcastAsOfJoinExec]] (the fact side never shuffles — the 100 TB
   * plan for "events as-of a reference table"), anything larger as the
-  * co-partitioned merge [[AsOfJoinExec]]. Injected per-session via
-  * `graft.functions.GraftFunctions.register` (experimental.extraStrategies)
-  * or globally via `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * co-partitioned merge [[AsOfJoinExec]]. Injected when the session is
+  * built, by `graft.functions.GraftExtensions` (which `graft.Harness.session`
+  * applies, or `spark.sql.extensions` names).
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

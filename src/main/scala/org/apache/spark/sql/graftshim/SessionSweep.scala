@@ -71,4 +71,10 @@ object SessionSweep {
     Utils.createTempDir(Utils.getLocalDir(sc.conf), prefix)
 
   def deleteRecursively(dir: java.io.File): Unit = Utils.deleteRecursively(dir)
+
+  /** A fresh `<prefix>-<uuid>` dir under `java.io.tmpdir`, deleted at JVM
+    * exit: the same Spark call, for dirs made before (or without) a
+    * `SparkContext` — the session's warehouse and the specs' scratch dirs.
+    */
+  def exitScopedDir(prefix: String): java.io.File = Utils.createTempDir(namePrefix = prefix)
 }

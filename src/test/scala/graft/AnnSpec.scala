@@ -56,7 +56,7 @@ class AnnSpec extends AnyFunSuite {
     val v0 = detVec(seed)
     val v1 = v0.zipWithIndex.map { case (x, i) => x + (if (i == 0) 0.001f else 0f) }
     val rest = (2 until 24).map(i => (i.toLong, detVec(i).toSeq, 0))
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = scratchDir(prefix).toString
     ((0L, v0.toSeq, 0) +: (1L, v1.toSeq, 0) +: rest)
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -343,7 +343,7 @@ class AnnSpec extends AnyFunSuite {
     val v1 = v0.zipWithIndex.map { case (x, i) => x + (if (i == 0) 0.001f else 0f) }
     val v2 = vec(2)
     val v3 = v2.clone()
-    val dir = java.nio.file.Files.createTempDirectory("embed-dedup").toString
+    val dir = scratchDir("embed-dedup").toString
     Seq((0L, v0.toSeq, 0), (1L, v1.toSeq, 0), (2L, v2.toSeq, 1), (3L, v3.toSeq, 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -435,7 +435,7 @@ class AnnSpec extends AnyFunSuite {
   test("semDedup: a planted duplicate vector is dropped, the lower id kept") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("semdedup").toString
+    val dir = scratchDir("semdedup").toString
     val base = Array.tabulate(8)(i => math.sin(i + 1).toFloat)
     val far = Array.tabulate(8)(i => math.cos(3 * i + 2).toFloat)
     Seq((0L, base.toSeq, 0), (1L, far.toSeq, 0), (2L, base.toSeq, 0))
@@ -478,7 +478,7 @@ class AnnSpec extends AnyFunSuite {
   test("embedQuantize: all-zero vectors quantize to zeros under the scale-0 guard") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("quant").toString
+    val dir = scratchDir("quant").toString
     Seq((0L, Seq.fill(4)(0f), 0), (1L, Seq(1f, -2f, 0.5f, 2f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -517,7 +517,7 @@ class AnnSpec extends AnyFunSuite {
     // a verbatim benchmark copy (cos 1) must be flagged
     val s2 = spark
     import s2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("decontam-embed").toString
+    val dir = scratchDir("decontam-embed").toString
     val rows = Seq(
       (0L, Seq(1f, 0f, 0f, 0f), 0), // the "benchmark" vector
       (1L, Seq(1f, 0f, 0f, 0f), 0), // exact leak of it

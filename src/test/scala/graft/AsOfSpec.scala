@@ -50,7 +50,6 @@ class AsOfSpec extends AnyFunSuite {
   private def shim(left: Seq[(Long, Long, String)], right: Seq[(Long, Long, String)]) = {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val l = left.toDF("k", "t", "ev")
     val r = right.toDF("r_k", "r_t", "payload")
     AsOfJoinShim.asof(l, r, "k", "r_k", "t", "r_t")
@@ -79,7 +78,6 @@ class AsOfSpec extends AnyFunSuite {
   test("null key/time rows never match and are passed through") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     def run(): Map[String, Option[String]] = {
       val l = Seq((Some(1L), Some(10L), "ok"), (None, Some(10L), "nullkey"),
         (Some(1L), None, "nulltime")).toDF("k", "t", "ev")
@@ -120,7 +118,6 @@ class AsOfSpec extends AnyFunSuite {
   test("property: both physical variants == driver-side reference on random logs") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val rnd = new scala.util.Random(42)
     for (round <- 1 to 6) {
       // odd rounds force the co-partitioned merge exec; even rounds use the
@@ -163,7 +160,6 @@ class AsOfSpec extends AnyFunSuite {
   test("string keys: interpreted ordering handles non-numeric key types") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val l = Seq(("alpha", 10L, "e1"), ("beta", 5L, "e2"), ("alpha", 3L, "e3"))
       .toDF("k", "t", "ev")
     val r = Seq(("alpha", 4L, "pa"), ("beta", 5L, "pb"), ("gamma", 1L, "pg"))
@@ -299,7 +295,6 @@ class AsOfSpec extends AnyFunSuite {
     // cannot hide behind the broadcast variant
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val rnd = new scala.util.Random(7)
     val right = rnd.shuffle((for {
       k <- 0 until 5; t <- 0 until 30 if rnd.nextDouble() < 0.4

@@ -24,7 +24,7 @@ class BehaviorSpec extends AnyFunSuite {
     import s.implicits._
     val baseUs = java.time.Instant.parse("2024-01-01T00:00:00Z")
       .getEpochSecond * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("behavior").toString
+    val dir = scratchDir("behavior").toString
     rows.map { case (eid, us, uid, tpe) =>
       (eid, (baseUs + us) * 1000L, uid, tpe, 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -59,7 +59,7 @@ class CatalogSpec extends AnyFunSuite {
     import s.implicits._
     // sibling dirs that encode to the same namespace must be an error,
     // not a nondeterministic pick of whichever the filesystem lists first
-    val tmp = java.nio.file.Files.createTempDirectory("ambig").toFile
+    val tmp = scratchDir("ambig").toFile
     new java.io.File(tmp, "sf0.1").mkdirs()
     new java.io.File(tmp, "sf0_1").mkdirs()
     Seq((1L, "x")).toDF("id", "v")
@@ -86,7 +86,7 @@ class CatalogSpec extends AnyFunSuite {
   test("two roots in one session get independent catalog instances") {
     // register() names the catalog by root, so a second root cannot be
     // poisoned by the first one's cached initialize()
-    val tmp = java.nio.file.Files.createTempDirectory("lake").toFile
+    val tmp = scratchDir("lake").toFile
     val sub = new java.io.File(tmp, "tiny.lake"); sub.mkdirs()
     val s = spark
     import s.implicits._

@@ -14,7 +14,7 @@ class CorpusSpec extends AnyFunSuite {
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("corpus").toString
+    val dir = scratchDir("corpus").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .selectExpr("doc_id", "text", "lang", "source",
         "CAST(length(text) AS BIGINT) AS n_chars") // fixture n_chars is BIGINT

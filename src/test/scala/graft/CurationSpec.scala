@@ -16,7 +16,7 @@ class CurationSpec extends AnyFunSuite {
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("curation").toString
+    val dir = scratchDir("curation").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .selectExpr("doc_id", "text", "lang", "source", "length(text) AS n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -75,7 +75,7 @@ class CurationSpec extends AnyFunSuite {
     // grouped outputs omitted them), never task-crash on them.
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("nulltext").toString
+    val dir = scratchDir("nulltext").toString
     Seq[(Long, String, String, String)](
         (1L, "the quick brown fox the a of and one two three four", "en", "s"),
         (2L, null, "en", "s"),
@@ -764,7 +764,7 @@ class CurationSpec extends AnyFunSuite {
   test("dqViolations: planted violations are counted with min sample keys; clean rules report zero") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dq").toString
+    val dir = scratchDir("dq").toString
     val d = java.sql.Date.valueOf(_: String)
     // customers 1, 2
     Seq(Tuple1(1L), Tuple1(2L)).toDF("c_custkey")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +26,7 @@ class DedupSpec extends AnyFunSuite {
   private lazy val dir: String = {
     val s = spark
     import s.implicits._
-    val d = Files.createTempDirectory("dedup-spec").toString
+    val d = scratchDir("dedup-spec").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d
@@ -121,7 +119,7 @@ class DedupSpec extends AnyFunSuite {
     // the store lifecycle on a store of the spec's own: the union-back
     // takes the historical store to the replay's store1, and a retried
     // append is a no-op because the store is dedup-on-write
-    val storeDir = Files.createTempDirectory("dedup-union-back").toString
+    val storeDir = scratchDir("dedup-union-back").toString
     Dedup.persistDigestStore(spark, Sf0001, storeDir)
     val s2 = spark
     import s2.implicits._
@@ -315,7 +313,7 @@ class DedupSpec extends AnyFunSuite {
       } ++ Seq((60L, (0 until 20).map(j => s"w${(3L * 7 + j * 3) % vocabSize}").mkString(" ")))
     for (vs <- Seq(40, 120)) {
       val cs = corpus(vs)
-      val d = Files.createTempDirectory(s"dedup-path-$vs").toString
+      val d = scratchDir(s"dedup-path-$vs").toString
       cs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -388,7 +386,7 @@ class DedupSpec extends AnyFunSuite {
     val b = a + " " + c
     val chain = Seq((10L, a), (11L, b), (12L, c),
       (13L, "totally unrelated words about spark physical plans here"))
-    val d = Files.createTempDirectory("dedup-chain").toString
+    val d = scratchDir("dedup-chain").toString
     chain.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -415,7 +413,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = for {
       (t, i) <- base.zipWithIndex; r <- 0 until 6
     } yield (100L * r + i, t)
-    val d = Files.createTempDirectory("dedup-groupcc").toString
+    val d = scratchDir("dedup-groupcc").toString
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -443,7 +441,7 @@ class DedupSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val n = Dedup.FanOutDepthCap + 6
-    val d = Files.createTempDirectory("dedup-deepfan").toString
+    val d = scratchDir("dedup-deepfan").toString
     (0 until n).map(i => (500L + i, "alpha beta gamma", "en", "s", 16L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -464,7 +462,7 @@ class DedupSpec extends AnyFunSuite {
     val n = Dedup.MaxBucket + 1
     val docs = (0 until n).map(i =>
       (1000L + i, "exactly the same boilerplate text repeated again and again", "en", "s", 57L))
-    val d = Files.createTempDirectory("dedup-hotbucket").toString
+    val d = scratchDir("dedup-hotbucket").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     assert(Dedup.minhash(spark, d).count() == 0)
@@ -480,7 +478,7 @@ class DedupSpec extends AnyFunSuite {
     val chain = (0 until 10).map { i =>
       (100L + i, (i until i + 10).map(j => s"w$j").mkString(" "))
     }
-    val d = Files.createTempDirectory("dedup-longchain").toString
+    val d = scratchDir("dedup-longchain").toString
     chain.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -530,7 +528,7 @@ class DedupSpec extends AnyFunSuite {
       "pairs pushed out of the window by rank are not (the documented trade)") {
     val s = spark
     import s.implicits._
-    val d = Files.createTempDirectory("dedup-sorted").toString
+    val d = scratchDir("dedup-sorted").toString
     val nearA = base // length L
     val nearB = base + " x" // L+2: rank-adjacent to A
     // longer unrelated padding docs: they all sort AFTER the near-dup trio,

@@ -2,10 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftFunctions, HashFunctions}
+import graft.functions.{GraftExtensions, GraftFunctions, HashFunctions}
 
 /** The native `fnv64` Catalyst expression: interpreted/codegen parity with
-  * the Scala function, SQL registration, null safety.
+  * the Scala function, null safety, and the SQL functions and rules that
+  * every [[Harness.session]] carries through [[GraftExtensions]].
   */
 class FunctionsSpec extends AnyFunSuite {
   import TestSpark._
@@ -25,12 +26,11 @@ class FunctionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val hof = "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
     // parquet round-trip (can't be constant-folded into a LocalRelation);
     // parquet arrays read back element-NULLABLE, so the null-aware kernel
     // must be selected
-    val dir = java.nio.file.Files.createTempDirectory("arraydot-rule").toString
+    val dir = scratchDir("arraydot-rule").toString
     Seq(
         (1L, Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](3.0, 4.0)),
         (2L, Seq[java.lang.Double](0.5, -1.0), Seq[java.lang.Double](2.0, 2.0)),
@@ -45,7 +45,7 @@ class FunctionsSpec extends AnyFunSuite {
     // null element poisons the fold -> NULL, exactly like the HOF
     assert(rows == Map(1L -> Some(11.0), 2L -> Some(-1.0), 3L -> None))
     // soundness guard: unequal lengths must stay NULL (zip_with pads nulls)
-    val uneqDir = java.nio.file.Files.createTempDirectory("arraydot-uneq").toString
+    val uneqDir = scratchDir("arraydot-uneq").toString
     Seq((1L, Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0)), (2L, Seq(1.0, 2.0), Seq(3.0, 4.0)))
       .toDF("id", "a", "b").write.mode("overwrite").parquet(uneqDir)
     val uneq = spark.read.parquet(uneqDir).selectExpr("id", s"$hof AS dot")
@@ -65,7 +65,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("sorted_overlap registers as a SQL function") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT sorted_overlap(array(1, 3, 5, 7), array(3, 4, 5, 9)) AS n")
       .collect()(0).getAs[Int]("n")
@@ -73,13 +72,11 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("fnv64 registers as a SQL function") {
-    GraftFunctions.register(spark)
     val got = spark.sql("SELECT fnv64('abc') AS h").collect()(0).getAs[Long]("h")
     assert(got == HashFunctions.fnv64("abc"))
   }
 
   test("fnv64 is null-safe") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT fnv64(CAST(NULL AS STRING)) AS h").collect()(0)
     assert(r.isNullAt(0))
   }
@@ -102,7 +99,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("array_dot registers as a SQL function") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT array_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
       .collect()(0).getAs[Double]("d")
@@ -131,24 +127,41 @@ class FunctionsSpec extends AnyFunSuite {
     assert(HashFunctions.fnv64("a") == ((0xcbf29ce484222325L ^ 'a'.toLong) * 0x100000001b3L))
   }
 
-  test("GraftExtensions: the spark.sql.extensions entry point wires every function + the rewrite rule") {
-    // The per-session register() path is covered above; this exercises the
-    // OTHER deployment mode — a cluster admin setting
-    // spark.sql.extensions=graft.functions.GraftExtensions — end to end.
-    // A fresh SparkSession on the shared context picks the extensions up at
-    // build time; default/active session are restored for later suites
+  test("a wrong-arity call to each graft SQL function fails naming the function") {
+    val calls = Seq(
+      "fnv64()", "fnv64('a', 'b')",
+      "array_dot(array(1.0d))", "array_dot(array(1.0d), array(1.0d), array(1.0d))",
+      "sorted_overlap(array(1))", "sorted_overlap(array(1), array(1), array(1))",
+      "bpe_token_count()", "bpe_token_count('a', 'b')",
+      "ws_token_count()", "ws_token_count('a', 'b')",
+      "ws_split()", "ws_split('a', 'b')")
+    assert(calls.map(_.takeWhile(_ != '(')).toSet ==
+      GraftExtensions.functions.map(_.name).toSet)
+    val unnamed = calls.filterNot { call =>
+      scala.util.Try(spark.sql(s"SELECT $call AS x").collect()) match {
+        case scala.util.Failure(e) =>
+          String.valueOf(e.getMessage).contains(call.takeWhile(_ != '('))
+        case _ => false
+      }
+    }
+    assert(unnamed.isEmpty, s"wrong-arity calls that did not fail naming the function: $unnamed")
+  }
+
+  test("a fresh Harness.session resolves every graft function and rule before any as-of query") {
+    // getOrCreate returns a live active or default session unchanged, so
+    // both are cleared first; the new session shares the suite's
+    // SparkContext, and the shared session is restored for later suites
     // (suites run sequentially: Test/parallelExecution := false).
     import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.graftshim.{AsOfJoinExec, BroadcastAsOfJoinExec}
     val base = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val ext = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      assert(ext ne base, "extensions need a fresh session to apply")
-      val r = ext.sql(
+      val fresh = Harness.session(cores = 2)
+      assert(fresh ne base, "the spec needs a fresh session")
+      val r = fresh.sql(
         "SELECT fnv64('abc') AS h, bpe_token_count('a b!') AS nb, " +
           "ws_token_count(' a b ') AS nw, " +
           "sorted_overlap(array(1, 2), array(2, 3)) AS so, " +
@@ -160,15 +173,23 @@ class FunctionsSpec extends AnyFunSuite {
       assert(r.getAs[Int]("so") == 1)
       assert(r.getAs[Double]("d") == 11.0)
       assert(r.getSeq[String](5) == Seq("a", "b"))
-      // the injected optimizer rule fires without any register() call
-      val dir = java.nio.file.Files.createTempDirectory("ext-arraydot").toString
-      ext.range(1).selectExpr("id", "array(1.0d, 2.0d) AS a", "array(3.0d, 4.0d) AS b")
+      // the optimizer rule fires in the fresh session
+      val dir = scratchDir("fresh-arraydot").toString
+      fresh.range(1).selectExpr("id", "array(1.0d, 2.0d) AS a", "array(3.0d, 4.0d) AS b")
         .write.mode("overwrite").parquet(dir)
       val hof = "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-      val df = ext.read.parquet(dir).selectExpr("id", s"$hof AS dot")
+      val df = fresh.read.parquet(dir).selectExpr("id", s"$hof AS dot")
       assert(df.queryExecution.optimizedPlan.toString.contains("array_dot_nullsafe"),
-        "injected ArrayDotRewrite must fire in the extensions session")
+        "ArrayDotRewrite must fire in a fresh Harness.session")
       assert(df.collect()(0).getDouble(1) == 11.0)
+      // and the as-of strategy plans the native exec, not a window fallback
+      val plan = graft.operators.AsOf.q35AsofNative(fresh, Sf0001).queryExecution.sparkPlan
+      assert(plan.collect {
+        case e: AsOfJoinExec => e
+        case e: BroadcastAsOfJoinExec => e
+      }.size == 1, s"expected one native as-of exec in:\n$plan")
+      assert(plan.collect { case w: WindowExec => w }.isEmpty,
+        s"as-of planned through a window:\n$plan")
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)

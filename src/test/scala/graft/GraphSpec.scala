@@ -18,7 +18,7 @@ class GraphSpec extends AnyFunSuite {
   private def writeInteractions(pairs: Seq[(Long, Long)]): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graph").toString
+    val dir = scratchDir("graph").toString
     pairs.zipWithIndex.map { case ((u, k), idx) =>
       (idx.toLong, 1704067200000000000L + idx * 1000000000L, u, "view", 1.0,
         s"""{"k": $k}""")
@@ -168,7 +168,7 @@ class GraphSpec extends AnyFunSuite {
     // row and would keep user 7.
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graph-null").toString
+    val dir = scratchDir("graph-null").toString
     val rows =
       (0 until Graph.MaxItemsPerUser).map(k =>
         (k.toLong, 1704067200000000000L + k * 1000000000L, 7L, "view", 1.0,

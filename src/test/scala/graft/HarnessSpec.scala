@@ -73,7 +73,7 @@ class HarnessSpec extends AnyFunSuite {
     // round's label checkpoint are already pinned
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("harness-leak").toString
+    val dir = scratchDir("harness-leak").toString
     (0 until 10).map(i => (i.toString, s"doc $i")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     val chain = (0 until 9).map(i => (i.toString, (i + 1).toString))
@@ -141,7 +141,7 @@ class HarnessSpec extends AnyFunSuite {
     val names = Seq("q25_stream_window", "q15_events_window",
       "dedup_incremental", "ann_ivfpq_persisted")
     def dumpBytes(order: Seq[String]): Map[String, Seq[Array[Byte]]] = {
-      val out = Files.createTempDirectory("harness-verify")
+      val out = scratchDir("harness-verify")
       Verify.dump(harness, Sf0001, out.toString, order)
       names.map { n =>
         val listing = Files.list(out.resolve(n))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{KeyValue, MapReduceJob}
@@ -24,7 +22,7 @@ class IntermediateFormatSpec extends AnyFunSuite {
   test("writeIntermediate emits the exact {\"Key\":…,\"Value\":…} line format") {
     val s = spark
     import s.implicits._
-    val out = Files.createTempDirectory("mr-int").toString + "/part"
+    val out = scratchDir("mr-int").toString + "/part"
     MapReduceJob.writeIntermediate(
       s.createDataset(Seq(KeyValue("c", "138885"))), out)
     val lines = new java.io.File(out).listFiles()

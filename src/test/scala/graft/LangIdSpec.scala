@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps
@@ -24,7 +22,7 @@ class LangIdSpec extends AnyFunSuite {
   test("textLangId predicts the right language for real snippets") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("langid").toString
+    val dir = scratchDir("langid").toString
     snippets.map { case (id, t, lang) => (id, t, lang, "test", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

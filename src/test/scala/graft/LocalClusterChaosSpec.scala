@@ -49,8 +49,7 @@ class LocalClusterChaosSpec extends AnyFunSuite {
       .getOrCreate()
     try {
       import cluster.implicits._
-      val latch = java.nio.file.Files
-        .createTempDirectory("graft-chaos").resolve("executor-killed").toString
+      val latch = TestSpark.scratchDir("graft-chaos").resolve("executor-killed").toString
       def pairs = cluster.sparkContext
         .wholeTextFiles(TestSpark.PgGlob, 4)
         .map { case (p, c) => ("../" + p.substring(p.lastIndexOf('/') + 1), c) }

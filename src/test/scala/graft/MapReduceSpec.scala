@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{KeyValue, MapReduceJob, Workloads}
@@ -35,7 +33,7 @@ class MapReduceSpec extends AnyFunSuite {
     val ds = s.createDataset(Seq(
       KeyValue("b", "2"), KeyValue("a", "1"), KeyValue("c", "3"),
       KeyValue("a", "0"), KeyValue("z", "9")))
-    val out = Files.createTempDirectory("mr-sink").toString + "/out"
+    val out = scratchDir("mr-sink").toString + "/out"
     MapReduceJob.writeSortedText(ds, out)
     assert(readSink(out) == Seq("a 0", "a 1", "b 2", "c 3", "z 9"))
   }
@@ -62,7 +60,7 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("writeSortedText runs reducef once per key") {
     val ds = countedReduce()
-    val out = Files.createTempDirectory("mr-sink-once").toString + "/out"
+    val out = scratchDir("mr-sink-once").toString + "/out"
     ReduceCalls.n.set(0)
     MapReduceJob.writeSortedText(ds, out)
     assert(ReduceCalls.n.get == 5, "the range partitioner's sampling job re-ran the reduce")
@@ -73,11 +71,11 @@ class MapReduceSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     MapReduceJob.writeSortedText(countedReduce(),
-      Files.createTempDirectory("mr-sink-pins").toString + "/out")
+      scratchDir("mr-sink-pins").toString + "/out")
     assert(sc.getPersistentRDDs.keySet == before)
     intercept[Exception] {
       MapReduceJob.writeSortedText(countedReduce(failOn = "c"),
-        Files.createTempDirectory("mr-sink-fail").toString + "/out")
+        scratchDir("mr-sink-fail").toString + "/out")
     }
     assert(sc.getPersistentRDDs.keySet == before)
   }

@@ -13,7 +13,7 @@ class MrOutSourceSpec extends AnyFunSuite {
   import TestSpark._
 
   private def tmpDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).resolve("out").toString
+    scratchDir(name).resolve("out").toString
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): MrOutScan =
     df.queryExecution.executedPlan.collectFirst {
@@ -115,7 +115,7 @@ class MrOutSourceSpec extends AnyFunSuite {
   test("streaming write: Complete mode is refused, not silently mis-written") {
     val s = spark
     import s.implicits._
-    val staged = java.nio.file.Files.createTempDirectory("mrout-complete-probe")
+    val staged = scratchDir("mrout-complete-probe")
     Seq(("k", "v")).toDF("key", "value").write.mode("overwrite")
       .parquet(staged.resolve("in").toString)
     val out = tmpDir("mrout-complete-out")

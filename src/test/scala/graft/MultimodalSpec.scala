@@ -223,7 +223,7 @@ class MultimodalSpec extends AnyFunSuite {
     // boilerplate black hole the cap exists for
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("phash-cap").toString
+    val dir = scratchDir("phash-cap").toString
     val text = "the same picture rendered ten times over for the cap test"
     (0 until 10).map(i => (i * 3L, text, "en", "s0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +20,7 @@ class PartitionPruningSpec extends AnyFunSuite {
   }
 
   test("a partition-column filter cuts the files read, not just the rows") {
-    val d = Files.createTempDirectory("events-lake").toString
+    val d = scratchDir("events-lake").toString
     graft.sources.Tables.events(spark, Sf0001)
       .withColumn("edate", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("edate").parquet(s"$d/events_lake")

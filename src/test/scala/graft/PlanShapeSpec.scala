@@ -114,7 +114,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // exact replicas engage the adaptive set-collapse branch (the shape
     // under test); without them gset is a map-side projection by design
     val corpus = uniques ++ uniques.take(20).map { case (id, t) => (id + 1000L, t) }
-    val d = java.nio.file.Files.createTempDirectory("planshape-ngram").toString
+    val d = scratchDir("planshape-ngram").toString
     corpus.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")

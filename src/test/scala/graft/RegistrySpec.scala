@@ -29,8 +29,8 @@ class RegistrySpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty, s"oracle coverage drifted: $rowsOnly")
   }
 
-  private def mainSources: List[(java.nio.file.Path, String)] = {
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+  private def sourcesUnder(root: String): List[(java.nio.file.Path, String)] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     val sources = try files.iterator.asScala.toList
       .filter(_.toString.endsWith(".scala"))
       .map(p => p -> java.nio.file.Files.readString(p))
@@ -39,18 +39,40 @@ class RegistrySpec extends AnyFunSuite {
     sources
   }
 
+  private def mainSources = sourcesUnder("src/main/scala")
+
   test("one session builder and no regrown probe mains under src/main") {
     val sources = mainSources
+    val builder = """SparkSession\s*\.builder""".r
     val builders = sources.collect {
-      case (p, src) if src.contains("SparkSession.builder") => p.getFileName.toString
+      case (p, src) if builder.findFirstIn(src).isDefined => p.getFileName.toString
     }
     assert(builders == List("Harness.scala"),
       s"sessions must be built by graft.Harness only, found in: $builders")
+    // the specs share Harness.session too; only the local-cluster soak
+    // needs a multi-process context of its own
+    val testBuilders = sourcesUnder("src/test/scala").collect {
+      case (p, src) if builder.findFirstIn(src).isDefined => p.getFileName.toString
+    }
+    assert(testBuilders == List("LocalClusterChaosSpec.scala"),
+      s"specs must get their session from Harness.session, found builders in: $testBuilders")
     val probes = sources.flatMap { case (_, src) =>
       """\bobject\s+(Probe\w*)""".r.findAllMatchIn(src).map(_.group(1))
     }.toSet
     assert(probes == Set("ProbeData", "ProbeJobs", "ProbeStream"),
       s"one-off probe mains belong in operator comments and SCALE.md: $probes")
+  }
+
+  test("no session is patched after it is built under src/main") {
+    // graft's functions, rule and strategy come from GraftExtensions when
+    // Harness.session builds the session, never from a write into a live one
+    val patchers = for {
+      (p, src) <- mainSources
+      k <- Seq("experimental.extraOptimizations", "experimental.extraStrategies",
+        "functionRegistry.createOrReplaceTempFunction", "functionRegistry.registerFunction")
+          if src.contains(k)
+    } yield (p.getFileName.toString, k)
+    assert(patchers.isEmpty, s"live-session registration regrown: $patchers")
   }
 
   test("no global memo registry regrown under src/main") {
@@ -81,8 +103,8 @@ class RegistrySpec extends AnyFunSuite {
 
   test("only TransientCache makes or deletes staged dirs under src/main") {
     // a dir made or deleted anywhere else escapes the per-query sweep.
-    // SessionSweep forwards Spark's private temp-dir pair to TransientCache;
-    // the session's warehouse dir is the one session-wide exception
+    // SessionSweep forwards Spark's private temp-dir pair to TransientCache,
+    // and makes the session's warehouse dir, deleted at JVM exit
     val scope = Set("TransientCache.scala", "SessionSweep.scala")
     val banned = Seq("createTempDir", "deleteRecursively", "Files.copy",
       "SparkListenerApplicationEnd", "object Staging")
@@ -92,10 +114,8 @@ class RegistrySpec extends AnyFunSuite {
       k <- banned
       n = java.util.regex.Pattern.quote(k).r.findAllMatchIn(src).size if n > 0
     } yield (p.getFileName.toString, k, n)
-    assert(outside == List(("Harness.scala", "createTempDir", 1)),
+    assert(outside.isEmpty,
       s"staged dirs must be made through TransientCache.stageDir only: $outside")
-    assert(sources.exists { case (p, src) => p.getFileName.toString == "Harness.scala" &&
-      src.contains("createTempDirectory(\"graft-warehouse\")") })
   }
 
   test("only Streams starts a stream under src/main") {

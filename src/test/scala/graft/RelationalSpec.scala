@@ -125,7 +125,7 @@ class RelationalSpec extends AnyFunSuite {
         else base + math.abs(r) % (50 * binUs)
       (i, us, i % 7, types((math.abs(r >> 16) % 3).toInt), 0.0, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("q49-rand").toString
+    val dir = scratchDir("q49-rand").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
       .withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
         org.apache.spark.sql.functions.col("us")))
@@ -429,7 +429,7 @@ class RelationalSpec extends AnyFunSuite {
     import s.implicits._
     // planted: order 1 with two lines, order 2 with none, lines for
     // order 3 with NO header (the rows a left join would silently drop)
-    val dir = java.nio.file.Files.createTempDirectory("cogroup").toString
+    val dir = scratchDir("cogroup").toString
     Seq((1L, 10L, 100.00), (2L, 11L, 50.00))
       .toDF("o_orderkey", "o_custkey", "o_totalprice")
       .selectExpr("o_orderkey", "o_custkey", "o_totalprice",

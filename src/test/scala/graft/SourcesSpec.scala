@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +14,7 @@ class SourcesSpec extends AnyFunSuite {
   test("csv and json round-trips preserve the orders relation") {
     val orig = graft.sources.Tables.orders(spark, Sf0001)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    val d = Files.createTempDirectory("sources-rt").toString
+    val d = scratchDir("sources-rt").toString
     orig.write.mode("overwrite").option("header", "true").csv(s"$d/orders_csv")
     orig.write.mode("overwrite").json(s"$d/orders_json")
 
@@ -40,7 +38,7 @@ class SourcesSpec extends AnyFunSuite {
   test("orc round-trip preserves the orders relation (columnar alternative)") {
     val orig = graft.sources.Tables.orders(spark, Sf0001)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    val d = Files.createTempDirectory("sources-orc").toString
+    val d = scratchDir("sources-orc").toString
     orig.write.mode("overwrite").orc(s"$d/orders_orc")
     val fromOrc = spark.read.orc(s"$d/orders_orc")
     // ORC is self-describing: schema must survive without being supplied
@@ -72,7 +70,7 @@ class SourcesSpec extends AnyFunSuite {
   test("a parquet path rewritten with a new schema re-infers and replaces its cache entry") {
     val s = spark
     import s.implicits._
-    val d = Files.createTempDirectory("sources-schema").toString
+    val d = scratchDir("sources-schema").toString
     val path = s"$d/t.parquet"
     Seq((1L, "a")).toDF("id", "name").write.mode("overwrite").parquet(path)
     assert(graft.sources.Tables(spark, d, "t").columns.toSeq == Seq("id", "name"))

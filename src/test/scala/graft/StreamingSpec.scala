@@ -17,7 +17,7 @@ class StreamingSpec extends AnyFunSuite {
     */
   private lazy val eventsPath: String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Files.createTempDirectory("events-stream")
+    val d = scratchDir("events-stream")
     Files.copy(Paths.get(s"$Sf0001/events.parquet"),
       d.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     d.toString
@@ -81,7 +81,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incremental dedup: streaming first-seen set == batch exact dedup") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Files.createTempDirectory("docs-stream")
+    val d = scratchDir("docs-stream")
     Files.copy(Paths.get(s"$Sf0001/documents.parquet"),
       d.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docStream = spark.readStream
@@ -130,7 +130,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incremental near-dup: streaming LSH pair set == batch minhash pairs") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Files.createTempDirectory("neardup-stream")
+    val d = scratchDir("neardup-stream")
     Files.copy(Paths.get(s"$Sf0001/documents.parquet"),
       d.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docStream = spark.readStream
@@ -153,7 +153,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incremental EMBED near-dup: streaming pair set == batch embedNearDup") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Files.createTempDirectory("embed-neardup-stream")
+    val d = scratchDir("embed-neardup-stream")
     Files.copy(Paths.get(s"$Sf0001/embeddings.parquet"),
       d.resolve("embeddings.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val nbits = graft.operators.Ann.nbitsFor(
@@ -177,7 +177,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incremental IMAGE phash: streaming pair set == batch imagePhashPairs") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val d = Files.createTempDirectory("phash-stream")
+    val d = scratchDir("phash-stream")
     Files.copy(Paths.get(s"$Sf0001/documents.parquet"),
       d.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docStream = spark.readStream
@@ -784,8 +784,8 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ckpt = Files.createTempDirectory("debounce-ckpt").toString
-    val outDir = Files.createTempDirectory("debounce-restart-out").toString
+    val ckpt = scratchDir("debounce-ckpt").toString
+    val outDir = scratchDir("debounce-restart-out").toString
     val t0 = 1704067200000L
     def ts(sec: Long): Timestamp = new Timestamp(t0 + sec * 1000L)
     val input = MemoryStream[(Timestamp, Long, String, Long)]

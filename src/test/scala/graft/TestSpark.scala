@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.SessionSweep
 
 /** One SparkSession for the whole forked test JVM, built by [[Harness]].
   *
@@ -26,6 +27,12 @@ object TestSpark {
   }
 
   def spark: SparkSession = harness.spark
+
+  /** A fresh `<prefix>-<uuid>` scratch dir under `java.io.tmpdir`, deleted
+    * when this forked test JVM exits.
+    */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    SessionSweep.exitScopedDir(prefix).toPath
 
   /** Reference pg corpus (read-only fixtures; FIXTURES.md §A.1). */
   val PgGlob = "/root/reference/src/main/pg-*.txt"

@@ -178,7 +178,6 @@ class TextKernelSpec extends AnyFunSuite {
   }
 
   test("register as SQL functions; null-safe") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT bpe_token_count('hello, world!') AS nb, " +
         "ws_token_count(' a\tb  c ') AS nw, " +

@@ -21,7 +21,7 @@ class TimeSeriesSpec extends AnyFunSuite {
     import s.implicits._
     val baseUs = java.time.Instant.parse("2024-01-01T00:00:00Z")
       .getEpochSecond * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("timeseries").toString
+    val dir = scratchDir("timeseries").toString
     rows.map { case (eid, us, uid, v) =>
       (eid, (baseUs + us) * 1000L, uid, "metric", v, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

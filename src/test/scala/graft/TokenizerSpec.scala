@@ -69,7 +69,7 @@ class TokenizerSpec extends AnyFunSuite {
     import TestSpark._
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("repetition").toString
+    val dir = scratchDir("repetition").toString
     Seq(
       (1L, "a a a b", "en"),            // toks 4, dup 2; grams: "a a a","a a b" -> 2, dup 0
       (2L, "x y", "en"),                // under 3 tokens: whole doc is one gram
@@ -92,7 +92,7 @@ class TokenizerSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("repetition-parity").toString
+    val dir = scratchDir("repetition-parity").toString
     // real fixture docs plus whitespace edge cases the declarative semantics
     // are fussy about: SQL trim strips ' ' only, so leading \t/\n produce a
     // leading empty token under split's limit=-1

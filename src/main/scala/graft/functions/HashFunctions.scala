@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, Encoders, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.graftshim.{ArrayDotExpr, ArrayDotRewrite, AsOfJoinStrategy, BpeTokenCountExpr, Fnv64Expr, GraftColumnShim, LetterSplitExpr, SortedOverlapExpr, WsSplitExpr, WsTokenCountExpr}
 
 /** Deterministic 64-bit string hashing as a first-class engine extension:
@@ -83,7 +84,7 @@ object GraftFunctions {
     GraftColumnShim.column(LetterSplitExpr(GraftColumnShim.expression(c)))
 }
 
-/** graft's session extensions: the six SQL functions of [[GraftExtensions.functions]],
+/** graft's session extensions: the seven SQL functions of [[GraftExtensions.functions]],
   * the [[org.apache.spark.sql.graftshim.ArrayDotRewrite]] optimizer rule
   * (HOF dot-product idiom -> native kernel) and the
   * [[org.apache.spark.sql.graftshim.AsOfJoinStrategy]] planner strategy
@@ -125,5 +126,12 @@ object GraftExtensions {
       a => BpeTokenCountExpr(a(0))),
     new SqlFunction("ws_token_count", classOf[WsTokenCountExpr], 1,
       a => WsTokenCountExpr(a(0))),
-    new SqlFunction("ws_split", classOf[WsSplitExpr], 1, a => WsSplitExpr(a(0))))
+    new SqlFunction("ws_split", classOf[WsSplitExpr], 1, a => WsSplitExpr(a(0))),
+    new SqlFunction("wc_count", classOf[ScalaAggregator[_, _, _]], 2,
+      a => GraftColumnShim.udafExpression(graft.core.Workloads.WcAggregator, keyValue, a)))
+
+  /** `wc_count(key, value)`'s input: the reference's wc reducef
+    * (`Workloads.WcAggregator`) reads (key, value) pairs.
+    */
+  private lazy val keyValue = Encoders.product[graft.core.KeyValue]
 }

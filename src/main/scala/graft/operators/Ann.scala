@@ -208,14 +208,23 @@ object Ann {
     */
   val IvfTrainCap = 16384
 
+  /** The training sample every quantizer here is fit on: the first
+    * [[IvfTrainCap]] corpus vectors in `xxhash64(vec_id)` order, collected
+    * to the driver. The same rows at every call, so the IVF, PQ and IVFPQ
+    * indexes and semdedup's cells all train on one sample.
+    */
+  private def trainSample(c: DataFrame): Array[Array[Double]] =
+    c.orderBy(xxhash64(col("vec_id"))).limit(IvfTrainCap)
+      .select("vec").collect().map(_.getSeq[Double](0).toArray)
+
   /** Seeded Lloyd k-means over a driver-local sample: deterministic splitmix
-    * init, `iters` assignment/recompute rounds, empty cells keep their seed.
+    * init, 10 assignment/recompute rounds, empty cells keep their seed.
     * At IvfTrainCap×64 dims×10 iters this is ~10^8 flops — milliseconds on
     * the driver, ZERO Spark jobs (MLlib's KMeans spends more time scheduling
     * its per-iteration jobs than this takes in total).
     */
   private[operators] def fitCentroids(
-      train: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
+      train: Array[Array[Double]], k: Int): Array[Array[Double]] = {
     require(train.length >= k, s"need >= $k training vectors, got ${train.length}")
     val dim = train(0).length
     var state = 42L
@@ -231,7 +240,7 @@ object Ann {
     while (seen.size < k)
       seen += (((nextLong() % train.length) + train.length) % train.length).toInt
     val centroids = seen.iterator.map(train(_).clone()).toArray
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until 10) {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Int](k)
       train.foreach { v =>
@@ -287,9 +296,7 @@ object Ann {
     // cached (as lshTopK does): consumed by the train sample, the probe
     // side and the scoring join — without it the scan+norm runs three times
     val c = graft.TransientCache.cache(corpus(s, dir))
-    val train = c.orderBy(xxhash64(col("vec_id"))).limit(IvfTrainCap)
-      .select("vec").collect().map(_.getSeq[Double](0).toArray)
-    val cents = fitCentroids(train, nCells, iters = 10)
+    val cents = fitCentroids(trainSample(c), nCells)
     // Cell assignment on the TYPED tier (broadcast centroids, the
     // [[nearestExpanded]] JVM loop — identical expanded-form arithmetic to
     // [[cellCol]], the parity the PQ/IVFPQ oracles already rest on). Round
@@ -409,9 +416,7 @@ object Ann {
     require(threshold <= 1.0, s"cosine threshold must be <= 1.0, got $threshold")
     // cached: consumed by the train sample and the identity grouping
     val c = graft.TransientCache.cache(corpus(s, dir))
-    val train = c.orderBy(xxhash64(col("vec_id"))).limit(IvfTrainCap)
-      .select("vec").collect().map(_.getSeq[Double](0).toArray)
-    val cents = fitCentroids(train, nCells, iters = 10)
+    val cents = fitCentroids(trainSample(c), nCells)
     // identical-vector collapse (round 12, the dedup_minhash 100×-probe
     // finding): replicas share their cell AND every pairwise cosine, so
     // the within-cell pairing runs over UNIQUE vectors. The drop rule is
@@ -614,15 +619,14 @@ object Ann {
     */
   def pqTopK(s: SparkSession, dir: String, nQueries: Int = 8, k: Int = 10,
       m: Int = PqM, ksub: Int = PqK): DataFrame = {
-    val dim = 64 // embeddings fixture dimension (TESTDATA.md)
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
     // cached: the train sample, the query collect and the encode all read it
     val c = graft.TransientCache.cache(corpus(s, dir))
-    val train = c.orderBy(xxhash64(col("vec_id"))).limit(IvfTrainCap)
-      .select("vec").collect().map(_.getSeq[Double](0).toArray)
+    val train = trainSample(c)
+    val dim = train(0).length
+    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+    val sub = dim / m
     val books: Array[Array[Array[Double]]] = Array.tabulate(m)(mi =>
-      fitCentroids(train.map(_.slice(mi * sub, (mi + 1) * sub)), ksub, iters = 10))
+      fitCentroids(train.map(_.slice(mi * sub, (mi + 1) * sub)), ksub))
     val bsq = books.map(_.map(ct => ct.map(x => x * x).sum))
     // encode on the TYPED tier (broadcast codebooks, tight JVM loop). The
     // first formulation was the codegen'd [[cellCol]] argmin per subspace —
@@ -820,14 +824,13 @@ object Ann {
   private def trainEncodeIvfPq(s: SparkSession, dir: String, nCells: Int,
       m: Int, ksub: Int)
       : (DataFrame, Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
-    val dim = 64 // embeddings fixture dimension (TESTDATA.md)
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
     val c = graft.TransientCache.cache(corpus(s, dir))
     val (cents, books) = {
-      val train = c.orderBy(xxhash64(col("vec_id"))).limit(IvfTrainCap)
-        .select("vec").collect().map(_.getSeq[Double](0).toArray)
-      val cs = fitCentroids(train, nCells, iters = 10)
+      val train = trainSample(c)
+      val dim = train(0).length
+      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+      val sub = dim / m
+      val cs = fitCentroids(train, nCells)
       val csq = cs.map(ct => ct.map(x => x * x).sum)
       // residual codebooks on the sample's residuals, one k-means per subspace
       val residTrain = train.map { v =>
@@ -835,8 +838,7 @@ object Ann {
         Array.tabulate(dim)(i => v(i) - cs(cell)(i))
       }
       val bks = Array.tabulate(m)(mi =>
-        fitCentroids(residTrain.map(_.slice(mi * sub, (mi + 1) * sub)), ksub,
-          iters = 10))
+        fitCentroids(residTrain.map(_.slice(mi * sub, (mi + 1) * sub)), ksub))
       (cs, bks)
     }
     val encoded = graft.TransientCache.checkpoint(encodeWith(c, cents, books))

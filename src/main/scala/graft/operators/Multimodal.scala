@@ -382,7 +382,7 @@ object Multimodal {
   /** The planted replica augmentation (see the [[PhashExactBase]] doc) as
     * ONE function: batch [[imagePhashPairs]] and the streaming twin both
     * call this, so a change to the augmentation cannot drift them apart
-    * (the advanceAnyBucket discipline). The SQL oracle interpolates the
+    * (the one-`advanceBucket` discipline). The SQL oracle interpolates the
     * same constants; MultimodalSpec's straight-line replay deliberately
     * keeps its OWN copy — a differential that shares the code under test
     * stops being a differential.

@@ -31,27 +31,23 @@ object TextOps {
   /** wc_udaf — the SAME word count routed through the `functions.udaf`
     * REGISTRY tier: `Workloads.WcAggregator` (the typed
     * `Aggregator[KeyValue, Long, String]` whose equality with the holistic
-    * reduce WorkloadParitySpec already pins) registered as a SQL function
-    * and invoked from a `spark.sql` text query. This is the remaining rung
-    * of the reference's extensibility ladder (SURVEY §2.3 "UDF/UDAF
-    * surface"): the plugin-`.so` reducef as a catalog-registered aggregate
-    * a SQL user can call without touching the typed API. Catalyst still
-    * plans partial aggregation around the Aggregator's merge, so the
-    * exchange carries per-word partial counts — the combiner the reference
-    * lacks — and the gate holds the SQL-registry path to the exact wc
-    * oracle.
+    * reduce WorkloadParitySpec already pins) is the session's `wc_count`
+    * SQL function ([[graft.functions.GraftExtensions]]), called here by
+    * name. This is the remaining rung of the reference's extensibility
+    * ladder (SURVEY §2.3 "UDF/UDAF surface"): the plugin-`.so` reducef as a
+    * catalog-registered aggregate a SQL user can call without touching the
+    * typed API. Catalyst still plans partial aggregation around the
+    * Aggregator's merge, so the exchange carries per-word partial counts —
+    * the combiner the reference lacks — and the gate holds the SQL-registry
+    * path to the exact wc oracle.
     */
-  def wcUdaf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.udf.register("wc_count", udaf(graft.core.Workloads.WcAggregator))
+  def wcUdaf(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("word"))
-      .createOrReplaceTempView("wc_udaf_words")
-    // the aggregator consumes (key, value) pairs — the reference's wire
-    // tuple; its output is the reference's STRING count, cast back
-    s.sql("""SELECT word, CAST(wc_count(word, '1') AS BIGINT) AS cnt
-            |FROM wc_udaf_words GROUP BY word""".stripMargin)
-  }
+      .groupBy("word")
+      // the aggregator consumes (key, value) pairs — the reference's wire
+      // tuple; its output is the reference's STRING count, cast back
+      .agg(expr("CAST(wc_count(word, '1') AS BIGINT)").as("cnt"))
 
   /** wc — word count over documents.text (reference `src/mrapps/wc.go`).
     * explode → two-phase hash agg; at 100 TB this is one shuffle keyed on

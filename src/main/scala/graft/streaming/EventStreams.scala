@@ -1,9 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
+
+import scala.reflect.runtime.universe.{typeOf, TypeTag}
 
 /** Structured Streaming over the `events` table shape (event_id, ts, user_id,
   * event_type, value, props).
@@ -138,111 +144,42 @@ object EventStreams {
           })
   }
 
-  /** Incremental NEAR-dup detection over a document stream — the streaming
-    * twin of `Dedup.minhash`, and the operator a rolling crawl actually
-    * needs (exact dedup alone misses boilerplate-with-noise). Same LSH
-    * shape as the batch path: each arriving doc shingles + signs + bands in
-    * one typed flatMap, then state lives PER BAND BUCKET (the natural
-    * shard key): each bucket keeps the docs seen in it and an arriving
-    * doc emits exact-Jaccard-verified pairs against its bucket's history.
-    *
-    * Hot-bucket guard vs batch: batch (`Dedup.cappedBuckets`) drops an
-    * over-cap bucket ENTIRELY — it emits no pairs at all. A stream cannot
-    * retract what it already emitted (Append mode), so the closest
-    * achievable semantics is applied here: the moment a bucket's
-    * (`maxBucket`+1)-th distinct doc arrives, the bucket is POISONED — its
-    * history state is cleared (freeing memory, exactly the boilerplate
-    * black hole the cap exists for) and it never emits again. Divergence
-    * from batch is therefore one-way and bounded: only pairs among the
-    * first `maxBucket` docs of an over-cap bucket, emitted before the cap
-    * tripped, can appear that batch would suppress. The batch-parity
-    * contract (StreamingSpec) excludes over-cap buckets for this reason.
-    *
-    * Emission is at-least-once across bands (a pair sharing k band keys
-    * emits up to k times; within one bucket state dedups) — consumers
-    * `distinct()` downstream, the same contract as batch candidate
-    * generation before its `distinct`. State per bucket is bounded by the
-    * cap; at 100 TB/day the production variant adds a state TTL (timeout)
-    * so buckets forget cold history.
-    *
-    * Wire/state format: each doc's shingle set is carried as its SORTED
-    * 64-bit FNV hashes, not strings — ~8 bytes per shingle across the 16×
-    * band fan-out (the same ship-encoded-ints principle as the batch
-    * prefix-filter path), with exact Jaccard via a two-pointer merge.
-    * A 64-bit collision would merge two shingles (birthday bound ~1e-9 at
-    * 10⁶ distinct shingles per bucket) — the standard trade everywhere
-    * else in the engine's hashing tier.
-    *
-    * `idleTimeout = Some(d)`: evict buckets idle for d (processing time) —
-    * the production shape on an unbounded crawl, where cold buckets must
-    * forget history (matches a dedup horizon; the same trade batch dedup
-    * makes by re-running over a window of the corpus). `None`: no eviction,
-    * the shape for bounded replays (a processing-time timeout keeps the
-    * engine running empty batches, so an AvailableNow pass would not
-    * terminate — same constraint as [[sessionize]]). TTL eviction drops a
-    * bucket's HISTORY but never its poison: an over-cap bucket keeps an
-    * O(1) tombstone (flag, empty history) that carries no timeout at all —
-    * it can't be evicted and costs no periodic re-firing — so the "never
-    * emits again" guarantee holds for the process lifetime, not merely
-    * until the first idle period ([[advanceBucket]] encodes the
-    * transition; StreamingSpec pins timeout-then-rearrival silence).
-    * Tombstone cardinality is therefore unbounded by default (O(1) each,
-    * one per poisoned bucket); crawls where that matters opt into
-    * `tombstoneTtl` and/or watch the `poisonedBuckets` accumulator — both
-    * documented on [[incrementalNearDup]].
+  /** Per-bucket state of a near-dup stream: the members seen (id, payload),
+    * or a poisoned tombstone once the bucket exceeded the cap (history
+    * cleared, nothing emits again). One class for every modality; `D` is
+    * the payload its score reads.
     */
-  /** Per-bucket LSH state: the docs seen (id, sorted shingle hashes), or a
-    * poisoned marker once the bucket exceeded the cap (history cleared,
-    * nothing emits again).
-    */
-  case class BucketState(overCap: Boolean, docs: List[(Long, Array[Long])])
+  case class BucketState[D](overCap: Boolean, docs: List[(Long, D)])
 
-  /** One bucket's state transition for one flatMapGroupsWithState
-    * invocation, as a PURE function (factored out of the closure so the
-    * timeout path — which a bounded replay can't exercise — is directly
-    * unit-testable). Returns the next state (`None` = remove from the
-    * store) and the verified pairs to emit.
+  /** One bucket's transition for one flatMapGroupsWithState invocation, as
+    * a PURE function (so the timeout path, which a bounded replay cannot
+    * exercise, is directly unit-testable): arrival dedup by id, each new
+    * member scored against the bucket's history, poison at the cap.
+    * Returns the next state (`None` = remove from the store) and the pairs
+    * (min id, max id, score) whose score clears `threshold`.
     *
     * Timeout semantics: eviction frees a cold bucket's history, but POISON
-    * survives — dropping the `overCap` tombstone on TTL would let the
-    * bucket re-accumulate and emit pairs again after eviction,
-    * contradicting the documented "never emits again" guarantee. The
-    * tombstone is O(1) (flag + empty history), so retaining it for the
-    * process lifetime is the cheap side of that trade.
-    *
-    * In the wired query (default config) the timedOut-while-poisoned branch
-    * is additionally DEFENSIVE: the closure never arms a timeout on a
-    * tombstone, and per the GroupState contract a timeout must be re-armed
-    * on every invocation or none is set — so a tombstone cannot time out at
-    * all (resurrection is impossible by construction, not just handled).
-    *
-    * `expireTombstones` is the opt-in bounded-cardinality variant: when the
-    * caller gives tombstones their own (long) TTL, a timed-out tombstone is
-    * REMOVED rather than retained, so tombstone cardinality on an unbounded
-    * crawl stays bounded by the poison arrival rate × TTL horizon. The
-    * guarantee weakens correspondingly — "never emits again" becomes "never
-    * emits again until the bucket has been quiet for the tombstone TTL" —
-    * which is the same dedup-horizon trade the history TTL already makes.
+    * survives. Dropping the `overCap` tombstone on a timeout would let the
+    * bucket re-accumulate and emit pairs again, contradicting "never emits
+    * again". The tombstone is O(1) (flag + empty history), so keeping it
+    * for the process lifetime is the cheap side of that trade. In the wired
+    * query the timed-out-while-poisoned branch is also DEFENSIVE: the driver
+    * never arms a timeout on a tombstone, and a GroupState timeout must be
+    * re-armed on every invocation or none is set, so a tombstone cannot
+    * time out at all.
     */
-  /** The ONE state machine behind both near-dup twins — arrival dedup by
-    * id, emit-vs-history through `score`, poison at the cap, tombstone
-    * retention (or opt-in expiry) on timeout — parameterized over the
-    * per-doc payload so the text twin (sorted shingle hashes → Jaccard)
-    * and the embedding twin (vector + norm → cosine) cannot drift apart:
-    * a contract fix lands in exactly one place.
-    */
-  private def advanceAnyBucket[D](
+  private[graft] def advanceBucket[D](
       timedOut: Boolean,
       arrivals: Seq[(Long, D)],
-      prev: Option[(Boolean, List[(Long, D)])],
+      prev: Option[BucketState[D]],
       score: (D, D) => Double,
       threshold: Double,
-      maxBucket: Int,
-      expireTombstones: Boolean): (Option[(Boolean, List[(Long, D)])], List[(Long, Long, Double)]) = {
+      maxBucket: Int): (Option[BucketState[D]], List[(Long, Long, Double)]) = {
     if (timedOut) {
-      (if (!expireTombstones && prev.exists(_._1)) Some((true, Nil)) else None, Nil)
+      (prev.filter(_.overCap).map(_ => BucketState[D](overCap = true, Nil)), Nil)
     } else {
-      var (overCap, docs) = prev.getOrElse((false, List.empty[(Long, D)]))
+      var overCap = prev.exists(_.overCap)
+      var docs = prev.fold(List.empty[(Long, D)])(_.docs)
       val out = List.newBuilder[(Long, Long, Double)]
       arrivals.foreach { case (id, d) =>
         if (!overCap && !docs.exists(_._1 == id)) {
@@ -261,14 +198,101 @@ object EventStreams {
           }
         }
       }
-      (Some((overCap, docs)), out.result())
+      (Some(BucketState(overCap, docs)), out.result())
     }
   }
+
+  /** The ONE keyed-state driver behind the three near-dup streams (text
+    * q36, embedding q50, image q56): each twin maps an arriving item to its
+    * (bucket space, bucket key, id, payload) rows, and this groups them by
+    * bucket and runs [[advanceBucket]] with the twin's `score`. Poison,
+    * tombstone and idle eviction are defined here, once, for every modality.
+    *
+    * Hot-bucket guard vs batch: batch (`Dedup.cappedBuckets`) drops an
+    * over-cap bucket ENTIRELY — it emits no pairs at all. A stream cannot
+    * retract what it already emitted (Append mode), so the closest
+    * achievable semantics is applied here: the moment a bucket's
+    * (`maxBucket`+1)-th distinct member arrives, the bucket is POISONED —
+    * its history is cleared (freeing memory, exactly the boilerplate black
+    * hole the cap exists for) and it never emits again. Divergence from
+    * batch is therefore one-way and bounded: only pairs among the first
+    * `maxBucket` members of an over-cap bucket, emitted before the cap
+    * tripped, can appear that batch would suppress. The batch-parity
+    * contracts (StreamingSpec, the q50/q56 `require`s) exclude over-cap
+    * buckets for this reason.
+    *
+    * Emission is at-least-once across bucket spaces (a pair sharing k band
+    * or table keys emits up to k times; within one bucket state dedups), so
+    * consumers `distinct()` downstream — the same contract as batch
+    * candidate generation before its `distinct`.
+    *
+    * `idleTimeout = Some(d)`: evict buckets idle for d (processing time) —
+    * the production shape on an unbounded stream, where cold buckets must
+    * forget history (a dedup horizon). `None`: no eviction, the shape for
+    * bounded replays (a processing-time timeout keeps the engine running
+    * empty batches, so an AvailableNow pass would not terminate — same
+    * constraint as [[sessionize]]). Eviction drops a bucket's HISTORY but
+    * never its poison: a tombstone arms no timeout, so it stays resident
+    * with zero re-firing cost and the "never emits again" guarantee holds
+    * for the process lifetime. Tombstones are O(1) each, one per poisoned
+    * bucket; `poisonedBuckets` counts them.
+    *
+    * `poisonedBuckets`: a driver-registered accumulator incremented once
+    * per bucket-poisoning transition — the monitoring hook that surfaces
+    * how much content the cap is absorbing (at-least-once under task
+    * retries, so a monitoring signal, not an exact count). When the caller
+    * passes none, the NAMED accumulator `graft.<name>.poisonedBuckets` is
+    * registered, so cap activity is visible in the Spark UI by default.
+    */
+  private def nearDupBuckets[D: TypeTag](rows: Dataset[(Int, Long, Long, D)],
+      name: String, score: (D, D) => Double, threshold: Double, maxBucket: Int,
+      idleTimeout: Option[String], poisonedBuckets: Option[LongAccumulator])
+      : Dataset[(Long, Long, Double)] = {
+    val s = rows.sparkSession
+    import s.implicits._
+    val poisonAcc = poisonedBuckets.getOrElse(
+      s.sparkContext.longAccumulator(s"graft.$name.poisonedBuckets"))
+    val timeoutConf =
+      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    rows
+      .groupByKey { case (space, key, _, _) => (space, key) }
+      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+        (_: (Int, Long), it: Iterator[(Int, Long, Long, D)],
+         state: GroupState[BucketState[D]]) => {
+          val wasPoisoned = state.getOption.exists(_.overCap)
+          val (next, out) = advanceBucket(state.hasTimedOut,
+            it.map { case (_, _, id, d) => (id, d) }.toSeq,
+            state.getOption, score, threshold, maxBucket)
+          next match {
+            case Some(st) =>
+              state.update(st)
+              // live buckets re-arm the history TTL; a tombstone arms none
+              // (a timeout pending from before the cap tripped fires once
+              // into the timedOut branch, which keeps the tombstone)
+              if (!st.overCap) idleTimeout.foreach(state.setTimeoutDuration)
+              else if (!wasPoisoned) poisonAcc.add(1L)
+            case None => state.remove()
+          }
+          out.iterator
+        })(stateEncoder[D], implicitly[Encoder[(Long, Long, Double)]])
+  }
+
+  /** The bucket-state encoder of each payload type, derived once per JVM.
+    * A derived encoder numbers its list-serializer loop variable afresh and
+    * that number is spelled into the generated state projection, so an
+    * encoder derived per run would compile that class again on every run.
+    */
+  private val stateEncoders = new ConcurrentHashMap[String, ExpressionEncoder[_]]()
+
+  private def stateEncoder[D: TypeTag]: ExpressionEncoder[BucketState[D]] =
+    stateEncoders.computeIfAbsent(typeOf[D].toString,
+      _ => ExpressionEncoder[BucketState[D]]()).asInstanceOf[ExpressionEncoder[BucketState[D]]]
 
   /** Exact shingle-hash Jaccard for the text twin's verify (two-pointer
     * merge over the sorted 64-bit hashes).
     */
-  private def jaccardScore(a: Array[Long], b: Array[Long]): Double = {
+  private[graft] def jaccardScore(a: Array[Long], b: Array[Long]): Double = {
     var i = 0; var j = 0; var c = 0
     while (i < a.length && j < b.length) {
       if (a(i) == b(j)) { c += 1; i += 1; j += 1 }
@@ -278,85 +302,52 @@ object EventStreams {
     c.toDouble / (a.length + b.length - c).toDouble
   }
 
-  private[graft] def advanceBucket(
-      timedOut: Boolean,
-      arrivals: Seq[(Long, Array[Long])],
-      prev: Option[BucketState],
-      threshold: Double,
-      maxBucket: Int,
-      expireTombstones: Boolean = false): (Option[BucketState], List[(Long, Long, Double)]) = {
-    val (next, out) = advanceAnyBucket[Array[Long]](timedOut, arrivals,
-      prev.map(p => (p.overCap, p.docs)), jaccardScore,
-      threshold, maxBucket, expireTombstones)
-    (next.map { case (oc, ds) => BucketState(oc, ds) }, out)
-  }
+  /** Exact cosine for the embedding twin's verify: ascending-index dots,
+    * the same IEEE sequence as the batch `arrayDot` kernel and the DuckDB
+    * replay, over (vector, norm) payloads.
+    */
+  private[graft] def cosineScore(a: (Array[Double], Double), b: (Array[Double], Double)): Double =
+    graft.operators.Ann.dotAsc(a._1, b._1) / (a._2 * b._2)
 
-  /** `tombstoneTtl`: opt-in poison-tombstone expiry (see [[advanceBucket]])
-    * — bounds tombstone cardinality on an unbounded crawl at the cost of
-    * weakening "never emits again" to a TTL horizon. `poisonedBuckets`: an
-    * optional driver-registered accumulator incremented once per
-    * bucket-poisoning transition — the monitoring hook that surfaces how
-    * much boilerplate the cap is absorbing (visible in the Spark UI per
-    * stage; at-least-once under task retries, so it is a monitoring signal,
-    * not an exact count). When the caller passes none, a NAMED accumulator
-    * (`graft.neardup.poisonedBuckets`) is registered automatically, so the
-    * count is surfaced in the UI by default — tombstone growth on an
-    * unbounded crawl is observable without any opt-in.
+  /** Hamming as a SIMILARITY for the image twin (the driver emits on
+    * `score >= threshold`, more similar = higher): 64 − popcount(xor).
+    * Exact integers throughout — no float edge.
+    */
+  private[graft] def phashScore(a: Long, b: Long): Double =
+    (64 - java.lang.Long.bitCount(a ^ b)).toDouble
+
+  /** Incremental NEAR-dup detection over a document stream — the streaming
+    * twin of `Dedup.minhash`, and the operator a rolling crawl actually
+    * needs (exact dedup alone misses boilerplate-with-noise). Same LSH
+    * shape as the batch path: each arriving doc shingles + signs + bands in
+    * one typed flatMap into its 16 band buckets, and [[nearDupBuckets]]
+    * pairs it against each bucket's history with exact Jaccard.
+    *
+    * Wire/state format: each doc's shingle set is carried as its SORTED
+    * 64-bit FNV hashes, not strings — ~8 bytes per shingle across the 16×
+    * band fan-out (the same ship-encoded-ints principle as the batch
+    * prefix-filter path), with exact Jaccard via a two-pointer merge.
+    * A 64-bit collision would merge two shingles (birthday bound ~1e-9 at
+    * 10⁶ distinct shingles per bucket) — the standard trade everywhere
+    * else in the engine's hashing tier.
     */
   def incrementalNearDup(docs: DataFrame, threshold: Double = 0.5,
       idleTimeout: Option[String] = None,
       maxBucket: Int = graft.operators.Dedup.MaxBucket,
-      tombstoneTtl: Option[String] = None,
-      poisonedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
+      poisonedBuckets: Option[LongAccumulator] = None)
       : Dataset[(Long, Long, Double)] = {
     val s = docs.sparkSession
     import s.implicits._
     import graft.operators.Dedup
-    val poisonAcc = poisonedBuckets.getOrElse(
-      s.sparkContext.longAccumulator("graft.neardup.poisonedBuckets"))
-    val timeoutConf =
-      if (idleTimeout.isDefined || tombstoneTtl.isDefined)
-        GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    docs
+    val banded = docs
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
         val sh = Dedup.shingleSet(text)
         val hs = sh.map(graft.functions.HashFunctions.fnv64).distinct.sorted.toArray
         Dedup.bandKeys(sh).zipWithIndex.map { case (bk, b) => (b, bk, id, hs) }
       }
-      .groupByKey { case (b, bk, _, _) => (b, bk) }
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Array[Long])],
-         state: GroupState[BucketState]) => {
-          val wasPoisoned = state.getOption.exists(_.overCap)
-          val (next, out) = advanceBucket(
-            state.hasTimedOut,
-            rows.map { case (_, _, id, hs) => (id, hs) }.toSeq,
-            state.getOption, threshold, maxBucket,
-            expireTombstones = tombstoneTtl.isDefined)
-          next match {
-            case Some(st) =>
-              state.update(st)
-              if (!st.overCap) {
-                // live buckets re-arm the history TTL
-                idleTimeout.foreach(state.setTimeoutDuration)
-              } else {
-                if (!wasPoisoned) poisonAcc.add(1L)
-                // a poison tombstone gets NO timeout by default — it must
-                // stay resident to keep its bucket silent, and with no
-                // timeout it persists with zero periodic re-firing cost
-                // (any timeout pending from before the cap tripped fires
-                // once into the timedOut branch, which keeps the tombstone
-                // and arms nothing). With tombstoneTtl set, the tombstone
-                // re-arms its own long TTL and is removed when it fires —
-                // the bounded-cardinality trade documented on advanceBucket.
-                tombstoneTtl.foreach(state.setTimeoutDuration)
-              }
-            case None => state.remove()
-          }
-          out.iterator
-        })
+    nearDupBuckets(banded, "neardup", jaccardScore, threshold, maxBucket,
+      idleTimeout, poisonedBuckets)
   }
 
   /** q36_stream_neardup — the REGISTERED streaming near-dup query: one
@@ -379,76 +370,30 @@ object EventStreams {
         OutputMode.Append(), file = "documents.parquet")
       .distinct()
 
-  /** Per-bucket state of the EMBEDDING near-dup stream: vectors seen in
-    * this (table, bucket), or a poisoned tombstone past the cap — the
-    * embedding-modality sibling of [[BucketState]], with the same poison /
-    * tombstone / TTL contract.
-    */
-  case class EmbedBucketState(overCap: Boolean,
-      docs: List[(Long, Array[Double], Double)])
-
-  /** One (table, bucket)'s transition — [[advanceAnyBucket]] instantiated
-    * with exact-cosine verification (ascending-index dots, the same IEEE
-    * sequence as the batch `arrayDot` kernel and the DuckDB replay).
-    * Emits (min id, max id, raw cosine) for history pairs clearing the
-    * threshold; state/poison semantics are the shared machine's.
-    */
-  private[graft] def advanceEmbedBucket(
-      timedOut: Boolean,
-      arrivals: Seq[(Long, Array[Double], Double)],
-      prev: Option[EmbedBucketState],
-      threshold: Double,
-      maxBucket: Int,
-      expireTombstones: Boolean = false): (Option[EmbedBucketState], List[(Long, Long, Double)]) = {
-    def cosineScore(a: (Array[Double], Double), b: (Array[Double], Double)): Double =
-      graft.operators.Ann.dotAsc(a._1, b._1) / (a._2 * b._2)
-    val (next, out) = advanceAnyBucket[(Array[Double], Double)](timedOut,
-      arrivals.map { case (id, v, nrm) => (id, (v, nrm)) },
-      prev.map(p => (p.overCap, p.docs.map { case (id, v, nrm) => (id, (v, nrm)) })),
-      cosineScore, threshold, maxBucket, expireTombstones)
-    (next.map { case (oc, ds) =>
-      EmbedBucketState(oc, ds.map { case (id, (v, nrm)) => (id, v, nrm) })
-    }, out)
-  }
-
   /** Incremental EMBEDDING near-dup detection — the streaming twin of
     * `Ann.embedNearDup`, closing the modality matrix: text near-dups have
     * a batch and a streaming path, and so do embeddings. Each arriving
     * vector is sign-bucketed against the SAME [[graft.operators.Ann
     * .EmbedTables]] deterministic hyperplane tables as the batch operator
-    * (plane matrices are plan literals in the task closure); state lives
-    * per (table, bucket) and an arrival emits exact-cosine-verified pairs
-    * against its bucket's history. Same poison-cap / tombstone / TTL
-    * contract as [[incrementalNearDup]] — see that operator's notes for
-    * `tombstoneTtl` (opt-in bounded tombstone cardinality) and
-    * `poisonedBuckets` (auto-registered as the named accumulator
-    * `graft.embed_neardup.poisonedBuckets` when not supplied, so cap
-    * activity is surfaced by default). The one new constant is `nbits`,
-    * which a stream cannot derive from a corpus count and therefore takes
-    * as a deploy-time parameter (sized from expected corpus volume,
-    * exactly like choosing shard counts). Emission is at-least-once across
-    * tables; consumers `distinct()`.
+    * (plane matrices are plan literals in the task closure), and
+    * [[nearDupBuckets]] pairs it against each (table, bucket)'s history
+    * with exact cosine. The one new constant is `nbits`, which a stream
+    * cannot derive from a corpus count and therefore takes as a
+    * deploy-time parameter (sized from expected corpus volume, exactly like
+    * choosing shard counts).
     */
   def incrementalEmbedNearDup(vecs: DataFrame, nbits: Int,
       threshold: Double = 0.4,
-      nTables: Int = graft.operators.Ann.EmbedTables,
       idleTimeout: Option[String] = None,
       maxBucket: Int = graft.operators.Dedup.MaxBucket,
-      tombstoneTtl: Option[String] = None,
-      poisonedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
+      poisonedBuckets: Option[LongAccumulator] = None)
       : Dataset[(Long, Long, Double)] = {
     val s = vecs.sparkSession
     import s.implicits._
     import graft.operators.Ann
-    val poisonAcc = poisonedBuckets.getOrElse(
-      s.sparkContext.longAccumulator("graft.embed_neardup.poisonedBuckets"))
     val planes: Array[Array[Array[Double]]] =
-      Array.tabulate(nTables)(t => Ann.hyperplanes(64, nbits, seed = 42L + t))
-    val timeoutConf =
-      if (idleTimeout.isDefined || tombstoneTtl.isDefined)
-        GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    vecs.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
+      Array.tabulate(Ann.EmbedTables)(t => Ann.hyperplanes(64, nbits, seed = 42L + t))
+    val bucketed = vecs.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
       .flatMap { case (id, emb) =>
         val v = emb.iterator.map(_.toDouble).toArray
         val nrm = math.sqrt(Ann.dotAsc(v, v))
@@ -459,34 +404,11 @@ object EventStreams {
             if (Ann.dotAsc(v, planes(t)(k)) >= 0) b |= (1L << k)
             k += 1
           }
-          (t, b, id, v, nrm)
+          (t, b, id, (v, nrm))
         }
       }
-      .groupByKey { case (t, b, _, _, _) => (t, b) }
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Array[Double], Double)],
-         state: GroupState[EmbedBucketState]) => {
-          val wasPoisoned = state.getOption.exists(_.overCap)
-          val (next, out) = advanceEmbedBucket(
-            state.hasTimedOut,
-            rows.map { case (_, _, id, v, nrm) => (id, v, nrm) }.toSeq,
-            state.getOption, threshold, maxBucket,
-            expireTombstones = tombstoneTtl.isDefined)
-          next match {
-            case Some(st) =>
-              state.update(st)
-              if (!st.overCap) idleTimeout.foreach(state.setTimeoutDuration)
-              else {
-                if (!wasPoisoned) poisonAcc.add(1L)
-                // same tombstone timeout policy as the text twin: no
-                // timeout by default (resident, zero re-firing cost);
-                // with tombstoneTtl the tombstone re-arms and expires
-                tombstoneTtl.foreach(state.setTimeoutDuration)
-              }
-            case None => state.remove()
-          }
-          out.iterator
-        })
+    nearDupBuckets(bucketed, "embed_neardup", cosineScore, threshold, maxBucket,
+      idleTimeout, poisonedBuckets)
   }
 
   /** q50_stream_embed_neardup — the REGISTERED streaming embedding
@@ -526,63 +448,27 @@ object EventStreams {
     out
   }
 
-  /** Per-bucket state of the IMAGE-phash near-dup stream — the image
-    * sibling of [[BucketState]]: (asset_id, 64-bit dHash) members, or the
-    * poisoned tombstone past the cap. Same poison / tombstone / TTL
-    * contract as the text and embedding twins (one state machine,
-    * [[advanceAnyBucket]]).
-    */
-  case class PhashBucketState(overCap: Boolean, docs: List[(Long, Long)])
-
-  /** One (band, band-value) bucket's transition — [[advanceAnyBucket]]
-    * instantiated with hamming verification. The shared machine emits on
-    * `score >= threshold` (more similar = higher), so hamming rides as the
-    * SIMILARITY 64 − popcount(xor) with threshold 64 − maxHamming; the
-    * caller converts back. Exact integers throughout — no float edge.
-    */
-  private[graft] def advancePhashBucket(
-      timedOut: Boolean,
-      arrivals: Seq[(Long, Long)],
-      prev: Option[PhashBucketState],
-      maxHamming: Int,
-      maxBucket: Int,
-      expireTombstones: Boolean = false)
-      : (Option[PhashBucketState], List[(Long, Long, Double)]) = {
-    val (next, out) = advanceAnyBucket[Long](timedOut, arrivals,
-      prev.map(p => (p.overCap, p.docs)),
-      (a, b) => (64 - java.lang.Long.bitCount(a ^ b)).toDouble,
-      (64 - maxHamming).toDouble, maxBucket, expireTombstones)
-    (next.map { case (oc, ds) => PhashBucketState(oc, ds) }, out)
-  }
-
   /** incrementalImagePhash — the IMAGE near-dup STREAMING twin: per image
     * doc, the batch operator's exact decode → 9×8 pool → 64-bit dHash
     * ([[graft.operators.Multimodal.imagePhashPairs]]'s helpers, replica
     * augmentation included), exploded to the same 4×16-bit band keys;
-    * keyed state per (band, band-value) bucket pairs each arrival against
-    * the bucket's history at hamming ≤ maxHamming. Same cap / poison /
-    * tombstone / TTL contract as [[incrementalNearDup]]; emission is
-    * at-least-once across bands, consumers `distinct()`. An 8-byte hash
-    * per member keeps bucket state tiny — the image stream's state is
-    * smaller than the text twin's shingle arrays by construction.
+    * [[nearDupBuckets]] pairs each arrival against its (band, band-value)
+    * bucket's history at hamming ≤ maxHamming, riding as the similarity
+    * 64 − hamming ([[phashScore]]) with threshold 64 − maxHamming and
+    * mapped back on the way out. An 8-byte hash per member keeps bucket
+    * state tiny — the image stream's state is smaller than the text twin's
+    * shingle arrays by construction.
     */
   def incrementalImagePhash(docs: DataFrame,
       maxHamming: Int = graft.operators.Multimodal.PhashMaxHamming,
       idleTimeout: Option[String] = None,
       maxBucket: Int = graft.operators.Multimodal.PhashMaxBucket,
-      tombstoneTtl: Option[String] = None,
-      poisonedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
+      poisonedBuckets: Option[LongAccumulator] = None)
       : Dataset[(Long, Long, Int)] = {
     val s = docs.sparkSession
     import s.implicits._
     import graft.operators.Multimodal
-    val poisonAcc = poisonedBuckets.getOrElse(
-      s.sparkContext.longAccumulator("graft.image_phash.poisonedBuckets"))
-    val timeoutConf =
-      if (idleTimeout.isDefined || tombstoneTtl.isDefined)
-        GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    docs
+    val banded = docs
       .select(col("doc_id"), col("text"), col("n_chars"))
       .as[(Long, String, Long)]
       .flatMap { case (id, text, nChars) =>
@@ -598,29 +484,9 @@ object EventStreams {
             }
         }
       }
-      .groupByKey { case (b, bv, _, _) => (b, bv) }
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Long)],
-         state: GroupState[PhashBucketState]) => {
-          val wasPoisoned = state.getOption.exists(_.overCap)
-          val (next, out) = advancePhashBucket(
-            state.hasTimedOut,
-            rows.map { case (_, _, aid, hsh) => (aid, hsh) }.toSeq,
-            state.getOption, maxHamming, maxBucket,
-            expireTombstones = tombstoneTtl.isDefined)
-          next match {
-            case Some(st) =>
-              state.update(st)
-              if (!st.overCap) idleTimeout.foreach(state.setTimeoutDuration)
-              else {
-                if (!wasPoisoned) poisonAcc.add(1L)
-                // same tombstone timeout policy as the other twins
-                tombstoneTtl.foreach(state.setTimeoutDuration)
-              }
-            case None => state.remove()
-          }
-          out.iterator.map { case (a1, a2, sim) => (a1, a2, 64 - sim.toInt) }
-        })
+    nearDupBuckets(banded, "image_phash", phashScore, (64 - maxHamming).toDouble,
+        maxBucket, idleTimeout, poisonedBuckets)
+      .map { case (a1, a2, sim) => (a1, a2, 64 - sim.toInt) }
   }
 
   /** q56_stream_image_phash — the REGISTERED streaming image near-dup
@@ -842,7 +708,7 @@ object EventStreams {
     * unbounded crawl adds a timeout that forgets days older than the
     * horizon (covered days more than 7 days behind the user's max can never
     * be emitted again, so eviction is lossless — noted, not wired, same as
-    * [[incrementalNearDup]]'s TTL).
+    * [[nearDupBuckets]]' idle timeout).
     */
   def streamingRollingActive(events: DataFrame): DataFrame = {
     val s = events.sparkSession
@@ -1227,7 +1093,7 @@ object EventStreams {
     * constant-bounded-collect discipline), and the CURRENT-window histogram
     * is keyed streaming state — a plain incremental `groupBy(bin).count`
     * whose state is structurally bounded at 10 rows (the bin expression
-    * cannot produce an 11th key), so the advanceAnyBucket poison-cap
+    * cannot produce an 11th key), so the nearDupBuckets poison-cap
     * machinery the unbounded-key twins need (q36/q50/q56) is unnecessary
     * by construction: this is Catalyst-native keyed state with map-side
     * partial aggregation, the preferred tier when built-ins express the

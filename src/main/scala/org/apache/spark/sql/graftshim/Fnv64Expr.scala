@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedAggregator}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -129,4 +131,12 @@ case class SortedOverlapExpr(left: Expression, right: Expression)
 object GraftColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The aggregate expression a typed `Aggregator` binds over `children`
+    * (the one a `functions.udaf` registration installs), so a session
+    * extension can declare it as a SQL function.
+    */
+  def udafExpression[IN, BUF, OUT](agg: Aggregator[IN, BUF, OUT], in: Encoder[IN],
+      children: Seq[Expression]): Expression =
+    ScalaAggregator(UserDefinedAggregator(agg, in), children)
 }

@@ -134,7 +134,8 @@ class FunctionsSpec extends AnyFunSuite {
       "sorted_overlap(array(1))", "sorted_overlap(array(1), array(1), array(1))",
       "bpe_token_count()", "bpe_token_count('a', 'b')",
       "ws_token_count()", "ws_token_count('a', 'b')",
-      "ws_split()", "ws_split('a', 'b')")
+      "ws_split()", "ws_split('a', 'b')",
+      "wc_count('a')", "wc_count('a', 'b', 'c')")
     assert(calls.map(_.takeWhile(_ != '(')).toSet ==
       GraftExtensions.functions.map(_.name).toSet)
     val unnamed = calls.filterNot { call =>
@@ -173,6 +174,12 @@ class FunctionsSpec extends AnyFunSuite {
       assert(r.getAs[Int]("so") == 1)
       assert(r.getAs[Double]("d") == 11.0)
       assert(r.getSeq[String](5) == Seq("a", "b"))
+      val wc = fresh.sql("SELECT w, CAST(wc_count(w, '1') AS BIGINT) AS n " +
+          "FROM VALUES ('a'), ('b'), ('a') AS t(w) GROUP BY w").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(wc == Map("a" -> 2L, "b" -> 1L))
+      val missing = GraftExtensions.functions.map(_.name).filterNot(fresh.catalog.functionExists)
+      assert(missing.isEmpty, s"graft functions a fresh session lacks: $missing")
       // the optimizer rule fires in the fresh session
       val dir = scratchDir("fresh-arraydot").toString
       fresh.range(1).selectExpr("id", "array(1.0d, 2.0d) AS a", "array(3.0d, 4.0d) AS b")

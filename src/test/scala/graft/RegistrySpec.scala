@@ -69,7 +69,8 @@ class RegistrySpec extends AnyFunSuite {
     val patchers = for {
       (p, src) <- mainSources
       k <- Seq("experimental.extraOptimizations", "experimental.extraStrategies",
-        "functionRegistry.createOrReplaceTempFunction", "functionRegistry.registerFunction")
+        "functionRegistry.createOrReplaceTempFunction", "functionRegistry.registerFunction",
+        "udf.register")
           if src.contains(k)
     } yield (p.getFileName.toString, k)
     assert(patchers.isEmpty, s"live-session registration regrown: $patchers")

@@ -41,15 +41,25 @@ class StreamingSpec extends AnyFunSuite {
 
   test("a twin's second run compiles no new classes") {
     import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.{DataFrame, SparkSession}
     // JVM-global counter, one tick per compiled class; suites run one at a
     // time, so only this test compiles between the two reads
     def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    EventStreams.windowedCountsQuery(spark, Sf0001).collect()
-    val before = compiled
-    val rows = EventStreams.windowedCountsQuery(spark, Sf0001).collect()
-    val fresh = compiled - before
-    assert(rows.nonEmpty)
-    assert(fresh == 0, s"the second run of q25_stream_window compiled $fresh classes")
+    // the three near-dup twins share one keyed-state driver, whose state
+    // projection must be the same code on every run
+    val twins = Seq[(String, (SparkSession, String) => DataFrame)](
+      "q25_stream_window" -> EventStreams.windowedCountsQuery,
+      "q36_stream_neardup" -> EventStreams.nearDupQuery,
+      "q50_stream_embed_neardup" -> EventStreams.embedNearDupQuery,
+      "q56_stream_image_phash" -> EventStreams.imagePhashQuery)
+    twins.foreach { case (name, query) =>
+      query(spark, Sf0001).collect()
+      val before = compiled
+      val rows = query(spark, Sf0001).collect()
+      val fresh = compiled - before
+      assert(rows.nonEmpty, name)
+      assert(fresh == 0, s"the second run of $name compiled $fresh classes")
+    }
   }
 
   test("the artifact-isolation conf is restored after a run, a failed build and a failed stream") {
@@ -200,61 +210,63 @@ class StreamingSpec extends AnyFunSuite {
     TransientCache.releaseAll(spark)
   }
 
-  test("advancePhashBucket lifecycle: hamming verify, poison at cap, tombstone persists") {
-    import EventStreams.{advancePhashBucket, PhashBucketState}
-    // hamming(h1, h2) = 2, hamming(h1, h3) = 64 (complement)
-    val h1 = 0L
-    val h2 = 3L
-    val h3 = -1L
-    // arrivals pair against HISTORY only, within maxHamming
-    val (st1, out1) = advancePhashBucket(timedOut = false,
-      Seq((1L, h1)), None, maxHamming = 10, maxBucket = 3)
-    assert(out1.isEmpty && st1.exists(!_.overCap))
-    val (st2, out2) = advancePhashBucket(timedOut = false,
-      Seq((2L, h2), (3L, h3)), st1, maxHamming = 10, maxBucket = 3)
-    // (1,2) hamming 2 emits (as similarity 62); 3 is too far from both
-    assert(out2.map(t => (t._1, t._2, 64 - t._3.toInt)) == List((1L, 2L, 2)))
-    assert(st2.exists(_.docs.length == 3))
-    // cap: the 4th member poisons the bucket and frees history
-    val (st3, out3) = advancePhashBucket(timedOut = false,
-      Seq((4L, h1)), st2, maxHamming = 10, maxBucket = 3)
-    assert(out3.isEmpty)
-    assert(st3.exists(st => st.overCap && st.docs.isEmpty))
-    // timeout keeps the tombstone by default
-    val (st4, out4) = advancePhashBucket(timedOut = true,
-      Nil, st3, maxHamming = 10, maxBucket = 3)
-    assert(out4.isEmpty && st4.exists(_.overCap))
-    // with expiry opted in, the tombstone is removed
-    val (st5, _) = advancePhashBucket(timedOut = true,
-      Nil, st3, maxHamming = 10, maxBucket = 3, expireTombstones = true)
-    assert(st5.isEmpty)
+  /** One modality's script for [[runLifecycle]]: arrivals that fill a
+    * cap-3 bucket, the pairs they must emit, a 4th member, and re-arrivals
+    * after the bucket is poisoned.
+    */
+  private case class Lifecycle[D](name: String, score: (D, D) => Double, threshold: Double,
+      fill: Seq[Seq[(Long, D)]], pairs: Set[(Long, Long)], scoreOk: Double => Boolean,
+      overflow: (Long, D), rearrive: Seq[(Long, D)])
+
+  private def runLifecycle[D](c: Lifecycle[D]): Unit = {
+    import EventStreams.{advanceBucket, BucketState}
+    def step(timedOut: Boolean, in: Seq[(Long, D)], st: Option[BucketState[D]]) =
+      advanceBucket(timedOut, in, st, c.score, c.threshold, maxBucket = 3)
+    val tombstone = Some(BucketState[D](overCap = true, Nil))
+    var live: Option[BucketState[D]] = None
+    val out = c.fill.flatMap { in =>
+      val (next, o) = step(timedOut = false, in, live)
+      live = next
+      o
+    }
+    assert(out.map(p => (p._1, p._2)).toSet == c.pairs && out.size == c.pairs.size, c.name)
+    assert(out.forall(p => c.scoreOk(p._3)), s"${c.name}: $out")
+    assert(live.exists(st => !st.overCap && st.docs.size == 3), c.name)
+    // a cold live bucket: the timeout removes its state entirely
+    assert(step(timedOut = true, Nil, live) == ((None, Nil)), c.name)
+    // the 4th member trips the cap: poison, history freed, no emission
+    val (poisoned, out2) = step(timedOut = false, Seq(c.overflow), live)
+    assert(out2.isEmpty && poisoned == tombstone, c.name)
+    // the timeout keeps the tombstone, and re-arrivals stay silent
+    assert(step(timedOut = true, Nil, poisoned) == ((tombstone, Nil)), c.name)
+    assert(step(timedOut = false, c.rearrive, poisoned) == ((tombstone, Nil)),
+      s"${c.name}: a poisoned bucket emitted again after a timeout")
   }
 
-  test("advanceEmbedBucket lifecycle: cosine verify, poison at cap, TTL keeps poison") {
-    import EventStreams.{advanceEmbedBucket, EmbedBucketState}
-    def row(id: Long, v: Array[Double]) = {
+  test("advanceBucket lifecycle for every score: verify, poison at cap+1, tombstone survives timeout") {
+    import EventStreams.{cosineScore, jaccardScore, phashScore}
+    def vec(id: Long, v: Double*) = {
       var n = 0.0; v.foreach(x => n += x * x)
-      (id, v, math.sqrt(n))
+      (id, (v.toArray, math.sqrt(n)))
     }
-    val a = row(1L, Array(1.0, 0.0))
-    val b = row(2L, Array(1.0, 0.001)) // cos ~ 1 with a
-    val c = row(3L, Array(0.0, 1.0))   // orthogonal to a
-    val (s1, out1) = advanceEmbedBucket(timedOut = false, Seq(a, b, c), None, 0.9, 3)
-    assert(out1.map(p => (p._1, p._2)) == List((1L, 2L)))
-    assert(out1.head._3 > 0.99)
-    assert(s1.exists(st => !st.overCap && st.docs.size == 3))
-    // cap 3: the 4th distinct vector poisons; nothing emits, history clears
-    val (s2, out2) = advanceEmbedBucket(timedOut = false,
-      Seq(row(4L, Array(1.0, 0.0))), s1, 0.9, 3)
-    assert(out2.isEmpty && s2.exists(st => st.overCap && st.docs.isEmpty))
-    // TTL fires: poison survives as a tombstone; re-arrivals stay silent
-    val (s3, _) = advanceEmbedBucket(timedOut = true, Nil, s2, 0.9, 3)
-    assert(s3.exists(_.overCap))
-    val (_, out4) = advanceEmbedBucket(timedOut = false, Seq(a, b), s3, 0.9, 3)
-    assert(out4.isEmpty)
-    // with tombstone expiry opted in, the timeout removes the bucket
-    assert(advanceEmbedBucket(timedOut = true, Nil, s2, 0.9, 3,
-      expireTombstones = true)._1.isEmpty)
+    val hs = Array(1L, 2L, 3L)
+    // hamming(0, 3) = 2, hamming(0, -1) = 64 (complement)
+    val cases = Seq[Lifecycle[_]](
+      Lifecycle[Array[Long]]("text", jaccardScore, 0.5,
+        fill = Seq(Seq(1L -> hs, 2L -> hs, 3L -> hs)),
+        pairs = Set((1L, 2L), (1L, 3L), (2L, 3L)), scoreOk = _ == 1.0,
+        overflow = 4L -> hs, rearrive = Seq(5L -> hs, 6L -> hs)),
+      Lifecycle[(Array[Double], Double)]("embedding", cosineScore, 0.9,
+        // b is cos ~ 1 with a, c orthogonal to a
+        fill = Seq(Seq(vec(1L, 1.0, 0.0), vec(2L, 1.0, 0.001), vec(3L, 0.0, 1.0))),
+        pairs = Set((1L, 2L)), scoreOk = _ > 0.99,
+        overflow = vec(4L, 1.0, 0.0), rearrive = Seq(vec(1L, 1.0, 0.0), vec(2L, 1.0, 0.001))),
+      Lifecycle[Long]("image", phashScore, (64 - 10).toDouble,
+        // arrivals pair against HISTORY only: 3 is too far from both
+        fill = Seq(Seq(1L -> 0L), Seq(2L -> 3L, 3L -> -1L)),
+        pairs = Set((1L, 2L)), scoreOk = sim => 64 - sim.toInt == 2,
+        overflow = 4L -> 0L, rearrive = Seq(5L -> 0L, 6L -> 3L)))
+    cases.foreach(c => runLifecycle(c))
   }
 
   test("near-dup hot-bucket cap: over-cap bucket is poisoned and stops emitting") {
@@ -286,32 +298,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("advanceBucket: TTL eviction drops history but preserves poison") {
-    import EventStreams.{advanceBucket, BucketState}
-    val hs = Array(1L, 2L, 3L)
-    // cold NON-poisoned bucket: timeout removes the state entirely
-    assert(advanceBucket(timedOut = true, Nil,
-      Some(BucketState(overCap = false, List(7L -> hs))), 0.5, 3) == (None, Nil))
-    // poisoned bucket: timeout keeps an O(1) tombstone, emits nothing
-    assert(advanceBucket(timedOut = true, Nil,
-      Some(BucketState(overCap = true, Nil)), 0.5, 3) ==
-      (Some(BucketState(overCap = true, Nil)), Nil))
-    // re-arrival against the tombstone stays silent and stays poisoned —
-    // the exact sequence that resurrected a bucket before the fix
-    assert(advanceBucket(timedOut = false, Seq(8L -> hs, 9L -> hs),
-      Some(BucketState(overCap = true, Nil)), 0.5, 3) ==
-      (Some(BucketState(overCap = true, Nil)), Nil))
-    // opt-in bounded cardinality: with expireTombstones a timed-out
-    // tombstone is removed (the bucket may later re-accumulate — the
-    // documented TTL-horizon weakening), and a live bucket evicts as before
-    assert(advanceBucket(timedOut = true, Nil,
-      Some(BucketState(overCap = true, Nil)), 0.5, 3,
-      expireTombstones = true) == (None, Nil))
-    assert(advanceBucket(timedOut = true, Nil,
-      Some(BucketState(overCap = false, List(7L -> hs))), 0.5, 3,
-      expireTombstones = true) == (None, Nil))
-  }
-
   test("near-dup poison counter: one accumulator tick per poisoned bucket") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
@@ -340,25 +326,6 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(acc.value == graft.operators.Dedup.Bands.toLong)
     } finally q.stop()
-  }
-
-  test("advanceBucket lifecycle: emit under cap, poison at cap+1, silent ever after") {
-    import EventStreams.{advanceBucket, BucketState}
-    val hs = Array(1L, 2L, 3L)
-    // docs 1..3 fill a cap-3 bucket: all identical -> all 3 pairs emit
-    val (s1, out1) = advanceBucket(timedOut = false,
-      Seq(1L -> hs, 2L -> hs, 3L -> hs), None, 0.5, 3)
-    assert(out1.map(p => (p._1, p._2)).toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
-    assert(s1.exists(st => !st.overCap && st.docs.size == 3))
-    // doc 4 trips the cap: poison, history freed, no emission
-    val (s2, out2) = advanceBucket(timedOut = false, Seq(4L -> hs), s1, 0.5, 3)
-    assert(out2.isEmpty)
-    assert(s2.contains(BucketState(overCap = true, Nil)))
-    // TTL fires, then the same boilerplate re-arrives: still silent
-    val (s3, _) = advanceBucket(timedOut = true, Nil, s2, 0.5, 3)
-    val (s4, out4) = advanceBucket(timedOut = false, Seq(5L -> hs, 6L -> hs), s3, 0.5, 3)
-    assert(out4.isEmpty, "a poisoned bucket emitted again after TTL eviction")
-    assert(s4.contains(BucketState(overCap = true, Nil)))
   }
 
   test("near-dup TTL: poisoned bucket stays silent across a real timeout eviction") {

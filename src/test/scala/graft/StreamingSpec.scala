@@ -243,7 +243,9 @@ class StreamingSpec extends AnyFunSuite {
       s"${c.name}: a poisoned bucket emitted again after a timeout")
   }
 
-  test("advanceBucket lifecycle for every score: verify, poison at cap+1, tombstone survives timeout") {
+  // one table, one driver: each modality's score runs the same lifecycle
+  // script through the one advanceBucket[D]
+  private val lifecycles: Seq[Lifecycle[_]] = {
     import EventStreams.{cosineScore, jaccardScore, phashScore}
     def vec(id: Long, v: Double*) = {
       var n = 0.0; v.foreach(x => n += x * x)
@@ -251,22 +253,42 @@ class StreamingSpec extends AnyFunSuite {
     }
     val hs = Array(1L, 2L, 3L)
     // hamming(0, 3) = 2, hamming(0, -1) = 64 (complement)
-    val cases = Seq[Lifecycle[_]](
-      Lifecycle[Array[Long]]("text", jaccardScore, 0.5,
+    Seq[Lifecycle[_]](
+      Lifecycle[Array[Long]]("advanceBucket lifecycle: emit under cap, poison at cap+1, silent ever after",
+        jaccardScore, 0.5,
         fill = Seq(Seq(1L -> hs, 2L -> hs, 3L -> hs)),
         pairs = Set((1L, 2L), (1L, 3L), (2L, 3L)), scoreOk = _ == 1.0,
         overflow = 4L -> hs, rearrive = Seq(5L -> hs, 6L -> hs)),
-      Lifecycle[(Array[Double], Double)]("embedding", cosineScore, 0.9,
+      Lifecycle[(Array[Double], Double)](
+        "advanceEmbedBucket lifecycle: cosine verify, poison at cap, TTL keeps poison",
+        cosineScore, 0.9,
         // b is cos ~ 1 with a, c orthogonal to a
         fill = Seq(Seq(vec(1L, 1.0, 0.0), vec(2L, 1.0, 0.001), vec(3L, 0.0, 1.0))),
         pairs = Set((1L, 2L)), scoreOk = _ > 0.99,
         overflow = vec(4L, 1.0, 0.0), rearrive = Seq(vec(1L, 1.0, 0.0), vec(2L, 1.0, 0.001))),
-      Lifecycle[Long]("image", phashScore, (64 - 10).toDouble,
+      Lifecycle[Long]("advancePhashBucket lifecycle: hamming verify, poison at cap, tombstone persists",
+        phashScore, (64 - 10).toDouble,
         // arrivals pair against HISTORY only: 3 is too far from both
         fill = Seq(Seq(1L -> 0L), Seq(2L -> 3L, 3L -> -1L)),
         pairs = Set((1L, 2L)), scoreOk = sim => 64 - sim.toInt == 2,
         overflow = 4L -> 0L, rearrive = Seq(5L -> 0L, 6L -> 3L)))
-    cases.foreach(c => runLifecycle(c))
+  }
+
+  lifecycles.foreach(c => test(c.name)(runLifecycle(c)))
+
+  test("advanceBucket: TTL eviction drops history but preserves poison") {
+    import EventStreams.{advanceBucket, jaccardScore, BucketState}
+    val hs = Array(1L, 2L, 3L)
+    def step(timedOut: Boolean, in: Seq[(Long, Array[Long])], st: BucketState[Array[Long]]) =
+      advanceBucket(timedOut, in, Some(st), jaccardScore, 0.5, maxBucket = 3)
+    val tombstone = BucketState[Array[Long]](overCap = true, Nil)
+    // cold NON-poisoned bucket: timeout removes the state entirely
+    assert(step(timedOut = true, Nil, BucketState(overCap = false, List(7L -> hs))) == ((None, Nil)))
+    // poisoned bucket: timeout keeps an O(1) tombstone, emits nothing
+    assert(step(timedOut = true, Nil, tombstone) == ((Some(tombstone), Nil)))
+    // re-arrival against the tombstone stays silent and stays poisoned —
+    // the exact sequence that resurrected a bucket before the fix
+    assert(step(timedOut = false, Seq(8L -> hs, 9L -> hs), tombstone) == ((Some(tombstone), Nil)))
   }
 
   test("near-dup hot-bucket cap: over-cap bucket is poisoned and stops emitting") {
